@@ -86,7 +86,6 @@ def run_benchmarks(cpus: int, sf_dir: str, q1_only: bool = False) -> dict:
     from sentometrics_spark.aggregate.time_agg import aggregate_time, measures_fill
     from sentometrics_spark.config import TimeKernelSpec
     from sentometrics_spark.lexicons import Lexicons, fixture_lexicons
-    from sentometrics_spark.scoring.algebraic import compute_sentiment_algebraic
     from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
     from sentometrics_spark import entry_queries as eq
     from sentometrics_spark.textops.dedup import decontaminate as _decontaminate
@@ -155,7 +154,7 @@ def run_benchmarks(cpus: int, sf_dir: str, q1_only: bool = False) -> dict:
 
     # q5: doc aggregation + fill + rolling on day tier
     def q5():
-        sent = compute_sentiment_algebraic(pages, lex_nv, "proportional")
+        sent = compute_sentiment_udf(pages, lex_nv, "proportional", mode="unigram")
         m = aggregate_docs(sent, by="day", how="equal_weight", keep_partials=False).persist()
         filled = measures_fill(m.select("bucket_ts", "lexicon", "feature", "value"), by="day", fill="zero")
         kernels = setup_time_weights((TimeKernelSpec("exponential", alphas_exp=(0.1, 0.3)),), 7)
@@ -184,7 +183,7 @@ def run_benchmarks(cpus: int, sf_dir: str, q1_only: bool = False) -> dict:
         # the measured work is score-once + the attribution join family,
         # not N recomputations of the unpersisted scoring subtree that
         # attributions_docs references from several join branches
-        sent = compute_sentiment_algebraic(pages, lex_nv, "proportional").persist()
+        sent = compute_sentiment_udf(pages, lex_nv, "proportional", mode="unigram").persist()
         m = aggregate_docs(sent, by="day", how="equal_weight", keep_partials=False)
         filled = measures_fill(
             m.select("bucket_ts", "lexicon", "feature", "value"),
@@ -215,13 +214,10 @@ def run_benchmarks(cpus: int, sf_dir: str, q1_only: bool = False) -> dict:
             # q2: scoring only, UDF engine (vs reference ~5.3k docs/s/core)
             ("q2_score_udf_counts", lambda: force(
                 compute_sentiment_udf(pages, lex_nv, "counts", mode="unigram"))),
-            # q3: scoring only, pure-Catalyst algebraic plan
-            ("q3_score_algebraic_counts", lambda: force(
-                compute_sentiment_algebraic(pages, lex_nv, "counts"))),
             # q4: valence cluster engine (sequential per-doc kernel)
             ("q4_score_udf_cluster", lambda: force(
                 compute_sentiment_udf(pages, lex, "counts", mode="cluster"))),
-            ("q5_pipeline_algebraic_day", q5),
+            ("q5_pipeline_udf_day", q5),
             # q6: dedup fingerprint (exact dup groups = rep)
             ("q6_dedup_fingerprint", lambda: force(eq.q_dedup_fingerprint(spark, sf_dir))),
             # q7: brute-force knn

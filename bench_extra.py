@@ -1,13 +1,17 @@
-"""Stage-isolation benchmarks for the optimization round (guide §1.4).
+"""Stage-isolation probes for the curation leaves of bench.py.
 
 NOT the frozen driver bench (bench.py is the measured contract) — this
-file exists to decompose the expensive suite queries into their stages
-with the noop sink, label jobs, and capture .explain("formatted") for
-plans/r06/. Run:
+file decomposes the expensive curation queries into their stages with the
+noop sink and labelled jobs. Run:
 
     python bench_extra.py <probe> [<probe> ...]
 
-Probes: q17, q18, q13, q5, q1, q11, q10. Each prints one JSON line.
+Probes: q18, q13, q11, q10. Each prints one JSON line.
+``python bench_extra.py --scaling-spans`` runs the span-dedup scaling probe.
+
+Per-layer figures for the scoring pipeline (scoring, doc_agg, time_agg,
+attribution) come from ``python3 perfbench/run.py --workload panel_batch
+--trace 1`` instead.
 """
 
 from __future__ import annotations
@@ -34,13 +38,6 @@ def timed(spark, name, fn, times: dict, runs: int = 2):
         spark.sparkContext.setJobDescription(None)
     times[name] = round(best, 3)
     return best
-
-
-def save_plan(df, fname):
-    os.makedirs("plans/r06", exist_ok=True)
-    with open(f"plans/r06/{fname}", "w") as f:
-        f.write(df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"))
 
 
 def realistic_span_corpus(spark, sf_dir: str, rep: int):
@@ -171,20 +168,12 @@ def main():
     spark = get_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from sentometrics_spark.lexicons import Lexicons, fixture_lexicons
-
-    lex = fixture_lexicons()
-    lex_nv = Lexicons(lex=lex.lex)
     pages = replicated_pages(spark, sf_dir, REPLICATE).cache()
     n_docs = pages.count()
     times: dict[str, float] = {"n_docs": n_docs}
 
     if "q18" in probes:
-        from sentometrics_spark.textops.dedup import (
-            _gram_positions,
-            _merge_position_spans,
-            repeated_spans,
-        )
+        from sentometrics_spark.textops.dedup import _gram_positions, repeated_spans
 
         d = pages.select(F.col("url").alias("doc_id"), "text")
         pos = _gram_positions(d, "doc_id", "text", 8, "xxhash64")
@@ -195,50 +184,6 @@ def main():
         timed(spark, "q18_c_flag_join", lambda: noop(flagged), times, runs)
         full = repeated_spans(d, n=8, min_repeats=2)
         timed(spark, "q18_full", lambda: noop(full), times, runs)
-
-    if "q17" in probes:
-        import pandas as pd
-
-        from sentometrics_spark import entry_queries as eq
-        from sentometrics_spark.aggregate.doc_agg import (
-            aggregate_docs,
-            doc_weights,
-            with_doc_weights,
-            bucket_col,
-        )
-        from sentometrics_spark.aggregate.time_agg import measures_fill
-        from sentometrics_spark.model.attribution import attributions_docs, coef_df
-        from sentometrics_spark.scoring.algebraic import compute_sentiment_algebraic
-
-        sent = compute_sentiment_algebraic(pages, lex_nv, "proportional").persist()
-        timed(spark, "q17_a_scoring", lambda: noop(sent), times, 1)
-        m = aggregate_docs(sent, by="day", how="equal_weight", keep_partials=False)
-        filled = measures_fill(
-            m.select("bucket_ts", "lexicon", "feature", "value"),
-            by="day", fill="latest", keep_source=True,
-        ).persist()
-        timed(spark, "q17_b_fill", lambda: noop(filled), times, 1)
-        kernels = eq._kernels_for(eq._ALMON2, 7)
-        keys = sorted(
-            (r["lexicon"], r["feature"])
-            for r in filled.select("lexicon", "feature").distinct().collect()
-        )
-        coefs = pd.Series({
-            f"{lx}--{ft}--{tw}": eq._attrib_coef(lx, ft, tw)
-            for lx, ft in keys for tw in kernels
-        })
-        cdf = coef_df(spark, coefs)
-        w = doc_weights(sent, by="day", how="equal_weight")
-        timed(spark, "q17_c_doc_weights", lambda: noop(w), times, runs)
-        s = sent.withColumn("bucket_ts", bucket_col(F.col("warc_ts"), "day"))
-        sw = s.join(w, ["url", "bucket_ts", "lexicon", "feature"])
-        timed(spark, "q17_d_weights_join", lambda: noop(sw), times, runs)
-        att = attributions_docs(sent, w, filled, cdf, kernels, 7, "day")
-        timed(spark, "q17_e_attrib_full", lambda: noop(att), times, runs)
-        att_inline = attributions_docs(
-            sent, None, filled, cdf, kernels, 7, "day", how="equal_weight")
-        timed(spark, "q17_f_attrib_inline", lambda: noop(att_inline), times, runs)
-        save_plan(att, "q17_attrib_docs_before.txt")
 
     if "q13" in probes:
         from sentometrics_spark.textops.dedup import simhash, simhash_near_pairs
@@ -266,93 +211,6 @@ def main():
         lm = fit_unigram_lm(d)
         timed(spark, "q11_b_score", lambda: noop(
             lm_cross_entropy(d, lm=lm)), times, runs)
-
-    if "score" in probes:
-        from sentometrics_spark.scoring.algebraic import compute_sentiment_algebraic
-
-        s_cnt = compute_sentiment_algebraic(pages, lex_nv, "counts")
-        timed(spark, "score_counts_noop", lambda: noop(s_cnt), times, runs)
-        s_prop = compute_sentiment_algebraic(pages, lex_nv, "proportional")
-        timed(spark, "score_prop_noop", lambda: noop(s_prop), times, runs)
-
-        def persist_cycle():
-            p = compute_sentiment_algebraic(pages, lex_nv, "proportional").persist()
-            noop(p)
-            p.unpersist()
-
-        timed(spark, "score_prop_persist", persist_cycle, times, runs)
-
-    if "alg" in probes:
-        from sentometrics_spark.corpus import feature_columns
-        from sentometrics_spark.scoring.algebraic import (
-            _tokens as _alg_tokens,
-            compute_sentiment_algebraic,
-            lexicon_df,
-        )
-
-        feats = feature_columns(pages)
-        docs = pages.select(
-            "url", "warc_ts", "lang", *feats, _alg_tokens().alias("tokens")
-        ).withColumn("word_count", F.size("tokens"))
-        timed(spark, "alg_a_tokens", lambda: noop(docs), times, runs)
-        tok = docs.select(
-            "url", "lang", "word_count", F.posexplode("tokens").alias("pos", "token"))
-        timed(spark, "alg_b_explode", lambda: noop(tok), times, runs)
-        lexdf = lexicon_df(spark, lex_nv)
-        hits = tok.join(
-            F.broadcast(lexdf),
-            (tok["lang"] == lexdf["lang"]) & (tok["token"] == lexdf["word"]),
-            "inner",
-        ).select(tok["url"], tok["lang"], "word_count", "pos", "token", "lexicon", "y")
-        timed(spark, "alg_c_hits", lambda: noop(hits), times, runs)
-        scores = hits.groupBy("url", "lexicon").agg(
-            F.sum(F.col("y") / F.col("word_count")).alias("lex_score"))
-        timed(spark, "alg_d_scores", lambda: noop(scores), times, runs)
-        full = compute_sentiment_algebraic(pages, lex_nv, "proportional")
-        timed(spark, "alg_e_full", lambda: noop(full), times, runs)
-        save_plan(full, "q3_score_algebraic_before.txt")
-
-    if "q5" in probes:
-        from sentometrics_spark.aggregate.doc_agg import aggregate_docs
-        from sentometrics_spark.aggregate.kernels import setup_time_weights
-        from sentometrics_spark.aggregate.time_agg import aggregate_time, measures_fill
-        from sentometrics_spark.config import TimeKernelSpec
-        from sentometrics_spark.scoring.algebraic import compute_sentiment_algebraic
-
-        sent = compute_sentiment_algebraic(pages, lex_nv, "proportional")
-        timed(spark, "q5_a_scoring", lambda: noop(sent), times, runs)
-        m = aggregate_docs(sent, by="day", how="equal_weight", keep_partials=False)
-        timed(spark, "q5_b_aggdocs", lambda: noop(m), times, runs)
-        mp = m.persist()
-        noop(mp)
-        filled = measures_fill(
-            mp.select("bucket_ts", "lexicon", "feature", "value"), by="day", fill="zero")
-        timed(spark, "q5_c_fill_only", lambda: noop(filled), times, runs)
-        kernels = setup_time_weights(
-            (TimeKernelSpec("exponential", alphas_exp=(0.1, 0.3)),), 7)
-        rolled = aggregate_time(filled, kernels, 7, check_lag=False)
-        timed(spark, "q5_d_rolled_from_cached_m", lambda: noop(rolled), times, runs)
-        mp.unpersist()
-
-    if "q1" in probes:
-        from sentometrics_spark.aggregate.doc_agg import aggregate_docs
-        from sentometrics_spark.aggregate.kernels import setup_time_weights
-        from sentometrics_spark.aggregate.time_agg import aggregate_time, measures_fill
-        from sentometrics_spark.config import TimeKernelSpec
-        from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
-
-        sent = compute_sentiment_udf(pages, lex_nv, "proportional", mode="unigram")
-        timed(spark, "q1_a_scoring", lambda: noop(sent), times, runs)
-        m = aggregate_docs(sent, by="hour", how="proportional", keep_partials=False)
-        timed(spark, "q1_b_aggdocs", lambda: noop(m), times, runs)
-        mp = m.persist()
-        noop(mp)
-        filled = measures_fill(
-            mp.select("bucket_ts", "lexicon", "feature", "value"), by="hour", fill="zero")
-        kernels = setup_time_weights((TimeKernelSpec("almon", orders_alm=(1, 2)),), 24)
-        rolled = aggregate_time(filled, kernels, 24, check_lag=False)
-        timed(spark, "q1_c_roll_from_cached_m", lambda: noop(rolled), times, runs)
-        mp.unpersist()
 
     print(json.dumps(times))
     spark.stop()

@@ -47,6 +47,10 @@ from pyspark.sql.window import Window
 
 SERIES_KEYS = ["lexicon", "feature"]
 
+# aggregate_time(strategy="auto") uses the window form up to this lag and the
+# join form beyond it (module docstring)
+K6_CROSSOVER_LAG = 512
+
 _STEP = {
     "hour": "interval 1 hour",
     "day": "interval 1 day",
@@ -188,26 +192,12 @@ def aggregate_time(
 
     strategy: 'window' (lag-column expansion, one pass, plan grows with
     lag), 'join' (broadcast kernel-position fan-out + re-aggregate,
-    bounded plan at any lag), or 'auto' (window for lag <= the crossover
-    — see the module docstring for the measured value).
+    bounded plan at any lag), or 'auto' (window for lag <=
+    ``K6_CROSSOVER_LAG`` — see the module docstring for the measured value).
     Both are positional (row-based) over the filled spine and produce
-    identical values up to float summation order.
-
-    Deploy knobs (the 512 crossover is a box-measured constant, not a
-    law): ``SENTO_K6_STRATEGY`` forces 'window'/'join' when ``strategy``
-    is 'auto', and ``SENTO_K6_CROSSOVER`` overrides the auto crossover
-    lag — so a cluster deploy can retune without a code edit."""
-    import os
-
+    identical values up to float summation order."""
     if strategy not in ("auto", "window", "join"):
         raise ValueError(f"unknown aggregate_time strategy: {strategy!r}")
-    if strategy == "auto":
-        env = os.environ.get("SENTO_K6_STRATEGY", "")
-        if env:
-            if env not in ("window", "join"):
-                raise ValueError(f"SENTO_K6_STRATEGY must be window|join, got {env!r}")
-            strategy = env
-    crossover = int(os.environ.get("SENTO_K6_CROSSOVER", "512"))
     keys = series_keys if series_keys is not None else SERIES_KEYS
     if check_lag and lag > 1:
         m = measures.select("bucket_ts").distinct().count()
@@ -216,7 +206,7 @@ def aggregate_time(
                 f"rolling time aggregation window (= {lag}) is too large for "
                 f"number of observations per measure (= {m})"
             )
-    if strategy == "join" or (strategy == "auto" and lag > crossover):
+    if strategy == "join" or (strategy == "auto" and lag > K6_CROSSOVER_LAG):
         return _aggregate_time_join(measures, kernels, lag, keys)
     if lag == 1:
         # all kernels are the scalar weight B[0]

@@ -36,7 +36,6 @@ from sentometrics_spark.corpus import (
     extract_text,
 )
 from sentometrics_spark.lexicons import Lexicons, fixture_lexicons, lexicon_values_sql, valence_values_sql
-from sentometrics_spark.scoring.algebraic import compute_sentiment_algebraic
 from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
 
 TSFMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -48,13 +47,14 @@ def _r6(col) -> F.Column:
     nudge moves the rounding cliff off exact .5 ties, where the two engines'
     sums can differ by 1 ulp and would otherwise round apart.
 
-    +-Infinity passes through unrounded: Spark's floor(DOUBLE) returns
-    BIGINT, so floor(inf*1e6) silently clamps to Long.MaxValue (9.22e12
-    after the divide) where DuckDB keeps inf — caught by the first full
-    sf0.1 oracle sweep on histogram_day's overflow bin (round 6)."""
+    +-Infinity and NaN pass through unrounded: Spark's floor(DOUBLE)
+    returns BIGINT, so floor(inf*1e6) silently clamps to Long.MaxValue
+    (9.22e12 after the divide) and floor(NaN) to 0, where DuckDB keeps inf
+    and NaN — the inf case was caught by the first full sf0.1 oracle sweep
+    on histogram_day's overflow bin."""
     c = col if not isinstance(col, str) else F.col(col)
     rounded = F.floor(c * 1000000.0 + 0.5 + 1e-9) / 1000000.0
-    return F.when(c == float("inf"), c).when(c == float("-inf"), c).otherwise(rounded)
+    return F.when(F.isnan(c) | (F.abs(c) == float("inf")), c).otherwise(rounded)
 
 TSFMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
@@ -95,7 +95,7 @@ FVAL_CASE = (
     "WHEN 'feat_nonspark' THEN s.feat_nonspark ELSE s.feat_srca END"
 )
 
-# within-doc contribution per algebraic how (see scoring/algebraic.py and
+# within-doc contribution per how (see scoring/udf_engine.py and
 # /root/reference/src/utils.h:86-175)
 _CONTRIB = {
     "counts": "h.y",
@@ -326,26 +326,7 @@ def _fmt_ts(df: DataFrame, col: str) -> DataFrame:
     return df.withColumn(col, F.date_format(col, TSFMT_SPARK))
 
 
-def _sent_query(how: str, bigram: bool = False):
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        pages = build_pages(spark, sf_dir, with_html=False)
-        lex = fixture_lexicons() if bigram else _no_valence()
-        sent = compute_sentiment_algebraic(pages, lex, how, use_valence_bigram=bigram)
-        return _fmt_ts(sent, "warc_ts").select(
-            "url",
-            "warc_ts",
-            "lang",
-            F.col("word_count").cast("long").alias("word_count"),
-            "lexicon",
-            "feature",
-            _r6("score").alias("score"),
-        )
-
-    return q
-
-
-def _sent_udf_query(how: str, mode: str):
+def _sent_udf_query(how: str, mode: str = "unigram"):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         pages = build_pages(spark, sf_dir, with_html=False)
@@ -368,7 +349,7 @@ def _agg_docs_query(how: str, by: str):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         pages = build_pages(spark, sf_dir, with_html=False)
-        sent = compute_sentiment_algebraic(pages, _no_valence(), "proportional")
+        sent = compute_sentiment_udf(pages, _no_valence(), "proportional", mode="unigram")
         m = aggregate_docs(sent, by=by, how=how, do_ignore_zeros=True, keep_partials=False)
         return _fmt_ts(m, "bucket_ts").select(
             "bucket_ts", "lexicon", "feature", _r6("value").alias("value")
@@ -381,7 +362,7 @@ def _measures_query(by: str, lag: int, kspecs: tuple[TimeKernelSpec, ...], fill:
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         pages = build_pages(spark, sf_dir, with_html=False)
-        sent = compute_sentiment_algebraic(pages, _no_valence(), "proportional")
+        sent = compute_sentiment_udf(pages, _no_valence(), "proportional", mode="unigram")
         m = aggregate_docs(sent, by=by, how=doc_how, do_ignore_zeros=True, keep_partials=False)
         filled = measures_fill(m.select("bucket_ts", "lexicon", "feature", "value"), by=by, fill=fill)
         kernels = setup_time_weights(kspecs, lag)
@@ -801,7 +782,7 @@ def q_tier_day_from_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     pages = build_pages(spark, sf_dir, with_html=False)
-    sent = compute_sentiment_algebraic(pages, _no_valence(), "proportional")
+    sent = compute_sentiment_udf(pages, _no_valence(), "proportional", mode="unigram")
     hour = base_tier(sent, how="proportional", by="hour")
     day = rollup(hour, "day")
     return _fmt_ts(day, "bucket_ts").select(
@@ -812,7 +793,7 @@ def q_tier_day_from_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _measures_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared measures panel (day, lag 7, almon kernels) for panel-op queries."""
     pages = build_pages(spark, sf_dir, with_html=False)
-    sent = compute_sentiment_algebraic(pages, _no_valence(), "proportional")
+    sent = compute_sentiment_udf(pages, _no_valence(), "proportional", mode="unigram")
     m = aggregate_docs(sent, by="day", how="equal_weight", keep_partials=False)
     filled = measures_fill(m.select("bucket_ts", "lexicon", "feature", "value"), by="day", fill="zero")
     kernels = setup_time_weights(_ALMON2, 7)
@@ -873,7 +854,7 @@ def q_peakdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sentometrics_spark.measures import peakdocs
 
     pages = build_pages(spark, sf_dir, with_html=False)
-    sent = compute_sentiment_algebraic(pages, _no_valence(), "counts")
+    sent = compute_sentiment_udf(pages, _no_valence(), "counts", mode="unigram")
     top = peakdocs(sent, 10, type="both")
     return top.select("url", _r6("m").alias("m"))
 
@@ -886,7 +867,7 @@ def q_peakdocs_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sentometrics_spark.measures import peakdocs
 
     pages = build_pages(spark, sf_dir, with_html=False)
-    sent = compute_sentiment_algebraic(pages, _no_valence(), "counts")
+    sent = compute_sentiment_udf(pages, _no_valence(), "counts", mode="unigram")
     top = peakdocs(sent, 0.02, type="pos")
     return top.select("url", _r6("m").alias("m"))
 
@@ -1106,8 +1087,8 @@ def q_measures_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         how_within="proportional", how_docs="equal_weight",
         time_kernels=_ALMON2, by="day", lag=7, fill="zero",
     )
-    sm0 = sento_measures(pages.filter(F.col("feat_srca") == 1.0), _no_valence(), spec, engine="algebraic")
-    sm1 = measures_update(sm0, pages, _no_valence(), engine="algebraic")
+    sm0 = sento_measures(pages.filter(F.col("feat_srca") == 1.0), _no_valence(), spec)
+    sm1 = measures_update(sm0, pages, _no_valence())
     return _fmt_ts(sm1.measures, "bucket_ts").select(
         "bucket_ts", "lexicon", "feature", "timeweight", _r6("value").alias("value")
     )
@@ -1228,7 +1209,7 @@ def q_agg_day_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     pages = build_pages(spark, sf_dir, with_html=False)
-    sent = compute_sentiment_algebraic(pages, _no_valence(), "proportional")
+    sent = compute_sentiment_udf(pages, _no_valence(), "proportional", mode="unigram")
     m = aggregate_docs_salted(
         sent, by="day", how="proportional", do_ignore_zeros=True,
         n_salts=16, keep_partials=False,
@@ -1245,7 +1226,7 @@ def q_tier_day_from_hour_exp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     pages = build_pages(spark, sf_dir, with_html=False)
-    sent = compute_sentiment_algebraic(pages, _no_valence(), "proportional")
+    sent = compute_sentiment_udf(pages, _no_valence(), "proportional", mode="unigram")
     hour = base_tier_exponential(sent, by="hour", alpha=0.1)
     day = rollup_exponential(hour, "day", alpha=0.1)
     return _fmt_ts(day, "bucket_ts").select(
@@ -1457,7 +1438,7 @@ def q_tier_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     pages = build_pages(spark, sf_dir, with_html=False)
-    sent = compute_sentiment_algebraic(pages, _no_valence(), "proportional")
+    sent = compute_sentiment_udf(pages, _no_valence(), "proportional", mode="unigram")
     day = rollup(base_tier(sent, how="proportional", by="hour"), "day")
     store = TierStore(spark, tempfile.mkdtemp(prefix="tier_store_q_"))
     store.write("day", day)
@@ -1936,7 +1917,7 @@ def _attrib_panel(spark: SparkSession, sf_dir: str, fill: str, keep_source: bool
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     pages = build_pages(spark, sf_dir, with_html=False)
-    sent = compute_sentiment_algebraic(pages, _no_valence(), "proportional")
+    sent = compute_sentiment_udf(pages, _no_valence(), "proportional", mode="unigram")
     m = aggregate_docs(sent, by="day", how="equal_weight", keep_partials=False)
     filled = measures_fill(
         m.select("bucket_ts", "lexicon", "feature", "value"),
@@ -4333,22 +4314,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_pages": q_corpus_pages,
         "corpus_summarize_day": q_corpus_summarize,
         "extract_text_invariant": q_extract_invariant,
-        # scoring — algebraic Catalyst plans (C1, C5, C6, C7)
-        "sent_counts": _sent_query("counts"),
-        "sent_proportional": _sent_query("proportional"),
-        "sent_prop_sqrt": _sent_query("proportionalSquareRoot"),
-        "sent_prop_pol": _sent_query("proportionalPol"),
-        "sent_tfidf": _sent_query("TFIDF"),
-        "sent_ushaped": _sent_query("UShaped"),
-        "sent_inv_ushaped": _sent_query("inverseUShaped"),
-        "sent_exp_within": _sent_query("exponential"),
-        "sent_inv_exp_within": _sent_query("inverseExponential"),
-        # scoring — valence bigram (C2), algebraic + UDF engines
-        "sent_bigram_counts": _sent_query("counts", bigram=True),
-        "sent_udf_proportional": _sent_udf_query("proportional", "unigram"),
-        "sent_udf_ushaped": _sent_udf_query("UShaped", "unigram"),
-        "sent_udf_tfidf": _sent_udf_query("TFIDF", "unigram"),
-        "sent_udf_prop_pol": _sent_udf_query("proportionalPol", "unigram"),
+        # scoring — unigram within-doc hows (C1, C5, C6, C7)
+        "sent_counts": _sent_udf_query("counts"),
+        "sent_proportional": _sent_udf_query("proportional"),
+        "sent_prop_sqrt": _sent_udf_query("proportionalSquareRoot"),
+        "sent_prop_pol": _sent_udf_query("proportionalPol"),
+        "sent_tfidf": _sent_udf_query("TFIDF"),
+        "sent_ushaped": _sent_udf_query("UShaped"),
+        "sent_inv_ushaped": _sent_udf_query("inverseUShaped"),
+        "sent_exp_within": _sent_udf_query("exponential"),
+        "sent_inv_exp_within": _sent_udf_query("inverseExponential"),
+        # scoring — valence bigram (C2); the sent_udf_* rows stay in the
+        # contract under their own names and run the same engine as above
+        "sent_bigram_counts": _sent_udf_query("counts", "bigram"),
+        "sent_udf_proportional": _sent_udf_query("proportional"),
+        "sent_udf_ushaped": _sent_udf_query("UShaped"),
+        "sent_udf_tfidf": _sent_udf_query("TFIDF"),
+        "sent_udf_prop_pol": _sent_udf_query("proportionalPol"),
         "sent_udf_bigram_counts": _sent_udf_query("counts", "bigram"),
         # doc aggregation (A1-A4)
         "agg_day_equal": _agg_docs_query("equal_weight", "day"),

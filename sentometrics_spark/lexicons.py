@@ -10,8 +10,7 @@ A :class:`Lexicons` object holds, per language:
 Lexicons are tiny relative to the corpus, so at execution time they travel as
 Spark broadcast variables into Arrow-batched UDF kernels (the Spark analogue
 of the reference's C++ ``unordered_map`` lexiconMap, /root/reference/src/utils.h:25-63)
-or as inline literal DataFrames for broadcast hash joins in the algebraic
-(pure-Catalyst) scoring path.
+or, for the DuckDB oracles, inline VALUES lists.
 """
 
 from __future__ import annotations

@@ -4,7 +4,7 @@
 
 One lazy DataFrame DAG:
 
-    corpus -> compute_sentiment (Arrow UDF or pure-Catalyst algebraic)
+    corpus -> compute_sentiment (one Arrow-UDF pass, scoring/udf_engine.py)
            -> aggregate_docs    (shuffle 1: (bucket, lexicon, feature))
            -> measures_fill     (spine join)
            -> aggregate_time    (shuffle 2: window partition by series)
@@ -22,29 +22,11 @@ from sentometrics_spark.aggregate.kernels import setup_time_weights
 from sentometrics_spark.aggregate.time_agg import aggregate_time, measures_fill
 from sentometrics_spark.config import AggSpec
 from sentometrics_spark.lexicons import Lexicons
-from sentometrics_spark.scoring.algebraic import ALGEBRAIC_HOWS, compute_sentiment_algebraic
-from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
-
-
-def compute_sentiment(
-    pages: DataFrame,
-    lexicons: Lexicons,
-    how: str = "proportional",
-    mode: str | None = None,
-    engine: str = "auto",
-) -> DataFrame:
-    """C9 dispatcher. engine: 'auto' | 'udf' | 'algebraic'.
-
-    'auto' uses the Arrow-UDF engine — its C-side tokenize/lookup is ~7x
-    the explode+join plan's throughput and it covers every (how, mode).
-    The pure-Catalyst algebraic plan stays available explicitly as the
-    independent cross-check formulation (and the basis of the SQL oracles)."""
-    if engine == "algebraic":
-        if how not in ALGEBRAIC_HOWS:
-            raise ValueError(f"how={how} is not algebraically expressible")
-        use_bigram = mode == "bigram" or (mode is None and bool(lexicons.valence))
-        return compute_sentiment_algebraic(pages, lexicons, how, use_valence_bigram=use_bigram)
-    return compute_sentiment_udf(pages, lexicons, how, mode=mode)
+# compute_sentiment (C9) is the Arrow-UDF engine itself: it covers every
+# (how, mode), so the public name needs no dispatcher in front of it.
+from sentometrics_spark.scoring.udf_engine import (
+    compute_sentiment_udf as compute_sentiment,
+)
 
 
 @dataclass
@@ -101,10 +83,9 @@ def sento_measures(
     pages: DataFrame,
     lexicons: Lexicons,
     spec: AggSpec,
-    engine: str = "auto",
     mode: str | None = None,
 ) -> SentoMeasures:
-    sentiment = compute_sentiment(pages, lexicons, spec.how_within, mode=mode, engine=engine)
+    sentiment = compute_sentiment(pages, lexicons, spec.how_within, mode=mode)
     measures_doc = aggregate_docs(
         sentiment,
         by=spec.by,
@@ -135,7 +116,6 @@ def measures_update(
     sm: SentoMeasures,
     pages_incoming: DataFrame,
     lexicons: Lexicons,
-    engine: str = "auto",
     mode: str | None = None,
 ) -> SentoMeasures:
     """M8: incremental recompute — score only documents whose url is not in
@@ -146,7 +126,7 @@ def measures_update(
     (storage/checkpoint.py) and of the streaming partials table."""
     existing_ids = sm.sentiment.select("url").distinct()
     new_pages = pages_incoming.join(existing_ids, "url", "left_anti")
-    new_sent = compute_sentiment(new_pages, lexicons, sm.spec.how_within, mode=mode, engine=engine)
+    new_sent = compute_sentiment(new_pages, lexicons, sm.spec.how_within, mode=mode)
     merged = sm.sentiment.unionByName(new_sent)
 
     from sentometrics_spark.aggregate.doc_agg import aggregate_docs

@@ -38,16 +38,6 @@ OUT_SCHEMA = (
 )
 
 
-def tokenize_series(texts: pd.Series) -> pd.Series:
-    """T1: lowercase -> UAX-29 word tokens, punctuation-only and number
-    tokens skipped (tokenize_texts with skip_word_none/skip_word_number,
-    /root/reference/R/sentiment_engines.R:13-17; rules in
-    scoring/tokenize.py)."""
-    from sentometrics_spark.scoring.tokenize import tokenize_to_lists
-
-    return pd.Series(tokenize_to_lists(texts), index=texts.index)
-
-
 def _positional_weights(how: str, pos: np.ndarray, n: np.ndarray) -> np.ndarray:
     """update_token_weights position formulas (/root/reference/src/utils.h:108-120).
     pos is 1-based token position, n the document token count."""

@@ -32,17 +32,6 @@ from sentometrics_spark.lexicons import Lexicons
 from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
 
 
-def read_pages_stream(
-    spark: SparkSession, path: str, schema: str, max_files_per_trigger: int = 8
-) -> DataFrame:
-    return (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(path)
-    )
-
-
 def stream_to_hour_tier(
     pages_stream: DataFrame,
     lexicons: Lexicons,

@@ -11,7 +11,7 @@ from sentometrics_spark.aggregate.time_agg import aggregate_time, measures_fill
 from sentometrics_spark.config import AggSpec, TimeKernelSpec
 from sentometrics_spark.lexicons import Lexicons
 from sentometrics_spark.pipeline import sento_measures
-from sentometrics_spark.scoring.algebraic import compute_sentiment_algebraic
+from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
 
 from tests import oracle as orc
 
@@ -25,7 +25,7 @@ def no_valence(lexicons):
 
 @pytest.fixture(scope="module")
 def sent(pages, no_valence):
-    return compute_sentiment_algebraic(pages, no_valence, "proportional").cache()
+    return compute_sentiment_udf(pages, no_valence, "proportional", mode="unigram").cache()
 
 
 @pytest.fixture(scope="module")

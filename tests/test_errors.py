@@ -8,24 +8,17 @@ from sentometrics_spark.aggregate.kernels import setup_time_weights
 from sentometrics_spark.aggregate.time_agg import aggregate_time
 from sentometrics_spark.config import TimeKernelSpec
 from sentometrics_spark.lexicons import Lexicons, fixture_lexicons
-from sentometrics_spark.scoring.algebraic import compute_sentiment_algebraic
 from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
 
 
 def test_lag_too_large_raises(pages, lexicons):
-    sent = compute_sentiment_algebraic(pages, Lexicons(lex=lexicons.lex), "counts")
+    sent = compute_sentiment_udf(pages, Lexicons(lex=lexicons.lex), "counts", mode="unigram")
     m = aggregate_docs(sent, by="month", keep_partials=False).select(
         "bucket_ts", "lexicon", "feature", "value"
     )
     kernels = setup_time_weights((TimeKernelSpec("equal_weight"),), 12)
     with pytest.raises(ValueError, match="too large"):
         aggregate_time(m, kernels, 12)
-
-
-def test_missing_language_raises_algebraic(pages):
-    en_only = Lexicons(lex={"en": fixture_lexicons().lex["en"]})
-    with pytest.raises(ValueError, match="no lexicon found"):
-        compute_sentiment_algebraic(pages, en_only, "counts")
 
 
 def test_missing_language_raises_udf(pages):

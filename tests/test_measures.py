@@ -101,9 +101,9 @@ def test_peakdates(panel):
 
 def test_peakdocs(pages, lexicons):
     from sentometrics_spark.lexicons import Lexicons
-    from sentometrics_spark.scoring.algebraic import compute_sentiment_algebraic
+    from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
 
-    sent = compute_sentiment_algebraic(pages, Lexicons(lex=lexicons.lex), "counts")
+    sent = compute_sentiment_udf(pages, Lexicons(lex=lexicons.lex), "counts", mode="unigram")
     # default = reference do.average=FALSE: rank by most extreme single
     # measure value (/root/reference/R/sentiment_engines.R:506-512)
     top = peakdocs(sent, 5, type="both").toPandas()

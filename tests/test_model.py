@@ -108,11 +108,11 @@ def test_attribution_reconciliation(spark, pages, lexicons):
         attributions_lags,
         coef_df,
     )
-    from sentometrics_spark.scoring.algebraic import compute_sentiment_algebraic
+    from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
 
     lag, by = 3, "week"
     lex = Lexicons(lex=lexicons.lex)
-    sent = compute_sentiment_algebraic(pages, lex, "proportional").cache()
+    sent = compute_sentiment_udf(pages, lex, "proportional", mode="unigram").cache()
     docagg = aggregate_docs(sent, by=by, how="proportional", keep_partials=False)
     filled = measures_fill(
         docagg.select("bucket_ts", "lexicon", "feature", "value"), by=by, fill="zero"

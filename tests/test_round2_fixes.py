@@ -2,7 +2,8 @@
 
 1. inverseProportional doc weighting with zero-token documents must not
    propagate inf/NaN (fused kernel and Catalyst aggregate_docs alike).
-2. 'Lexicon wins' valence conflict rule must hold in the algebraic engine.
+2. A word in both the lexicon and the valence table scores AND shifts in
+   the bigram engine, as in the reference.
 3. Checkpoint orphan batch directories (crash between results append and
    manifest append) must be swept on resume — no duplicate rows.
 4. ngram_jaccard_pairs hot-shingle cap bounds the candidate join.
@@ -17,7 +18,6 @@ from pyspark.sql import functions as F
 
 from sentometrics_spark.aggregate.doc_agg import aggregate_docs
 from sentometrics_spark.lexicons import Lexicons
-from sentometrics_spark.scoring.algebraic import compute_sentiment_algebraic
 from sentometrics_spark.scoring.fused import finalize_partials, score_to_bucket_partials
 from sentometrics_spark.scoring.udf_engine import (
     compute_sentiment_udf,
@@ -61,8 +61,11 @@ def test_empty_doc_inverse_proportional_fused(spark, simple_lex, ignore_zeros):
 
 
 def test_valence_lexicon_conflict_rule(spark):
-    # 'good' is BOTH a lexicon word and a valence shifter: lexicon must win
-    # in both engines (pack() already drops it; algebraic must match).
+    # 'good' is BOTH a lexicon word and a valence shifter. The reference
+    # keeps the overlap and the bigram scorer looks the preceding token up
+    # in the valence map unconditionally, so 'good' both scores and
+    # shifts; at position 0 the lookup index clamps to the token itself
+    # (reference src/SentimentScorerBigrams.h:68-71).
     lex = Lexicons(
         lex={"en": {"L": {"good": 1.0, "bad": -1.0}}},
         valence={"en": {"good": (9.0, 2), "not": (-1.0, 1)}},
@@ -75,17 +78,10 @@ def test_valence_lexicon_conflict_rule(spark):
         .sort_values("url")["score"]
         .to_numpy()
     )
-    alg = (
-        compute_sentiment_algebraic(pages, lex, "counts", use_valence_bigram=True)
-        .filter(F.col("feature") == "feat_x")
-        .toPandas()
-        .sort_values("url")["score"]
-        .to_numpy()
-    )
-    np.testing.assert_allclose(udf, alg, atol=1e-12)
-    # 'good bad day': good=+1 (not shifted by itself), bad preceded by 'good'
-    # which is NOT a shifter anymore -> -1; total 0
-    assert udf[0] == pytest.approx(0.0)
+    # 'good bad day':   9 x 1 (good, self-shifted) + 9 x -1 (bad)      = 0
+    # 'not bad at all': -1 x -1 (bad after the 'not' shifter)          = 1
+    # 'good good bad':  9 x 1 + 9 x 1 (second good) + 9 x -1 (bad)    = 9
+    np.testing.assert_allclose(udf, [0.0, 1.0, 9.0], atol=1e-12)
 
 
 def test_checkpoint_orphan_cleanup(spark, tmp_path):

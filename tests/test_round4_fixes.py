@@ -127,7 +127,6 @@ def test_pretokenized_langs_guarded_in_other_engines(spark):
     from pyspark.sql import functions as F
 
     from sentometrics_spark.lexicons import Lexicons
-    from sentometrics_spark.scoring.algebraic import compute_sentiment_algebraic
     from sentometrics_spark.scoring.sentences import compute_sentiment_sentences_udf
 
     lex = Lexicons(lex={"zh": {"L": {"好": 1.0}}}, pretokenized_langs={"zh"})
@@ -135,8 +134,6 @@ def test_pretokenized_langs_guarded_in_other_engines(spark):
         [("u0", "2024-01-01 00:00:00", "好", "zh", 1.0)],
         "url string, warc_ts string, text string, lang string, feat_all double",
     ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
-    with pytest.raises(ValueError, match="algebraic"):
-        compute_sentiment_algebraic(pages, lex, "counts")
     with pytest.raises(ValueError, match="sentence engine"):
         compute_sentiment_sentences_udf(pages, lex, "counts")
 

@@ -5,14 +5,14 @@ import pytest
 
 from sentometrics_spark.aggregate.doc_agg import aggregate_docs, aggregate_docs_salted
 from sentometrics_spark.lexicons import Lexicons, fixture_lexicons
-from sentometrics_spark.scoring.algebraic import compute_sentiment_algebraic
+from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
 
 KEY = ["bucket_ts", "lexicon", "feature"]
 
 
 @pytest.fixture(scope="module")
 def sent(pages, lexicons):
-    return compute_sentiment_algebraic(pages, Lexicons(lex=lexicons.lex), "proportional").cache()
+    return compute_sentiment_udf(pages, Lexicons(lex=lexicons.lex), "proportional", mode="unigram").cache()
 
 
 @pytest.mark.parametrize("how", ["equal_weight", "proportional", "exponential"])

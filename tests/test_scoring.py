@@ -1,5 +1,5 @@
-"""Scoring engines vs the independent pandas oracle, plus algebraic/UDF
-cross-agreement (the reference's cross-input-object agreement tests,
+"""The scoring engine vs the independent pandas oracle (the reference's
+cross-input-object agreement tests,
 /root/reference/tests/testthat/test_sentiment_computation.R:107-132)."""
 
 import numpy as np
@@ -8,7 +8,6 @@ import pytest
 
 from sentometrics_spark.config import HOWS_WITHIN
 from sentometrics_spark.lexicons import Lexicons, fixture_lexicons
-from sentometrics_spark.scoring.algebraic import ALGEBRAIC_HOWS, compute_sentiment_algebraic
 from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf, score_language_batch
 
 from tests import oracle as orc
@@ -38,13 +37,6 @@ def no_valence(lexicons):
     return Lexicons(lex=lexicons.lex)
 
 
-@pytest.mark.parametrize("how", ALGEBRAIC_HOWS)
-def test_algebraic_vs_oracle(pages, pages_pdf, no_valence, how):
-    got = compute_sentiment_algebraic(pages, no_valence, how)
-    exp = orc.oracle_sentiment(pages_pdf, no_valence, how, mode="unigram")
-    _cmp(got, exp)
-
-
 @pytest.mark.parametrize("how", HOWS_WITHIN)
 def test_udf_unigram_vs_oracle(pages, pages_pdf, no_valence, how):
     got = compute_sentiment_udf(pages, no_valence, how, mode="unigram")
@@ -63,12 +55,6 @@ def test_udf_bigram_vs_oracle(pages, pages_pdf, lexicons, how):
 def test_udf_cluster_vs_oracle(pages, pages_pdf, lexicons, how):
     got = compute_sentiment_udf(pages, lexicons, how, mode="cluster")
     exp = orc.oracle_sentiment(pages_pdf, lexicons, how, mode="cluster")
-    _cmp(got, exp)
-
-
-def test_algebraic_bigram_vs_oracle(pages, pages_pdf, lexicons):
-    got = compute_sentiment_algebraic(pages, lexicons, "counts", use_valence_bigram=True)
-    exp = orc.oracle_sentiment(pages_pdf, lexicons, "counts", mode="bigram")
     _cmp(got, exp)
 
 

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from sentometrics_spark.aggregate.tiers import base_tier
 from sentometrics_spark.lexicons import Lexicons, fixture_lexicons
-from sentometrics_spark.scoring.algebraic import compute_sentiment_algebraic
 from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
 from sentometrics_spark.storage.checkpoint import CheckpointedRun, partition_key_col
 from sentometrics_spark import streaming
@@ -47,7 +46,7 @@ def test_stream_equals_batch(spark, pages, tmp_path):
         .sort_values(KEY)
         .reset_index(drop=True)
     )
-    sent = compute_sentiment_algebraic(pages, lex, "proportional")
+    sent = compute_sentiment_udf(pages, lex, "proportional", mode="unigram")
     exp = (
         base_tier(sent, how="proportional", by="hour")
         .select(*KEY, "value")
@@ -72,7 +71,7 @@ def test_stream_equals_batch(spark, pages, tmp_path):
 
 def _score_fn(lex):
     def fn(df):
-        return compute_sentiment_algebraic(df, lex, "counts")
+        return compute_sentiment_udf(df, lex, "counts", mode="unigram")
 
     return fn
 

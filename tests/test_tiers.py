@@ -14,14 +14,14 @@ from sentometrics_spark.aggregate.tiers import (
     rollup,
 )
 from sentometrics_spark.lexicons import Lexicons, fixture_lexicons
-from sentometrics_spark.scoring.algebraic import compute_sentiment_algebraic
+from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
 
 KEY = ["bucket_ts", "lexicon", "feature"]
 
 
 @pytest.fixture(scope="module")
 def sent(pages, lexicons):
-    return compute_sentiment_algebraic(pages, Lexicons(lex=lexicons.lex), "proportional").cache()
+    return compute_sentiment_udf(pages, Lexicons(lex=lexicons.lex), "proportional", mode="unigram").cache()
 
 
 @pytest.mark.parametrize("how", ["equal_weight", "proportional", "inverseProportional"])

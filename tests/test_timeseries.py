@@ -1100,6 +1100,21 @@ def test_bucket_histogram_hand_and_rollup(spark):
         bucket_histogram(df, 5.0, 5.0, 10)
 
 
+def test_r6_passes_nan_and_inf_through(spark):
+    """The oracle rounding _r6 keeps NaN and +-inf as DuckDB's floor does:
+    Spark's floor(DOUBLE) returns BIGINT, which would turn NaN into 0 and
+    inf into Long.MaxValue / 1e6."""
+    import math
+
+    from sentometrics_spark.entry_queries import _r6
+
+    vals = [float("nan"), float("inf"), float("-inf"), 1.2345675, -0.5, None]
+    df = spark.createDataFrame([(v,) for v in vals], "v double")
+    got = [r[0] for r in df.select(_r6("v")).collect()]
+    assert math.isnan(got[0])
+    assert got[1:] == [float("inf"), float("-inf"), 1.234568, -0.5, None]
+
+
 def test_holt_forecast_vs_numpy(spark):
     import numpy as np
     import pandas as pd

@@ -131,15 +131,17 @@ def test_scoring_matches_pandas_oracle_on_punctuated_text(spark):
 
 
 @pytest.mark.parametrize("how", ["counts", "proportional", "UShaped", "TFIDF", "proportionalPol"])
-def test_algebraic_equals_udf_on_punctuated_text(spark, how):
-    """The pure-Catalyst engine runs the SAME UAX-29 pass pipeline JVM-side;
-    both engines must agree on punctuated/digit/unicode text."""
+def test_udf_equals_oracle_on_punctuated_text(spark, monkeypatch, how):
+    """Every within-doc how on punctuated/digit/unicode text equals the
+    naive pandas oracle (tests/oracle.py) when that oracle tokenizes with
+    the independent per-character UAX-29 implementation."""
     import datetime as dt
 
     from sentometrics_spark.lexicons import Lexicons
-    from sentometrics_spark.scoring.algebraic import compute_sentiment_algebraic
     from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
+    from tests import oracle as orc
 
+    monkeypatch.setattr(orc, "tokenize", uax29_word_tokens)
     lex = Lexicons(lex={"en": {"L": {"good": 1.0, "bad": -1.0, "don't": -0.5, "u.s.a": 2.0}}})
     texts = [
         "Good, very good! The U.S.A. won.",
@@ -154,7 +156,7 @@ def test_algebraic_equals_udf_on_punctuated_text(spark, how):
         rows, "url string, warc_ts timestamp, lang string, text string, feat_x double"
     )
     key = ["url", "lexicon", "feature"]
-    a = compute_sentiment_algebraic(pages, lex, how).toPandas().sort_values(key).reset_index(drop=True)
+    e = orc.oracle_sentiment(pages.toPandas(), lex, how, mode="unigram").sort_values(key).reset_index(drop=True)
     u = compute_sentiment_udf(pages, lex, how, mode="unigram").toPandas().sort_values(key).reset_index(drop=True)
-    np.testing.assert_array_equal(a["word_count"], u["word_count"])
-    np.testing.assert_allclose(a["score"], u["score"], atol=1e-12)
+    np.testing.assert_array_equal(u["word_count"], e["word_count"])
+    np.testing.assert_allclose(u["score"], e["score"], atol=1e-12)

@@ -68,9 +68,9 @@ def test_as_sentiment(spark):
 
 
 def test_peakdocs_quantile(pages, lexicons):
-    from sentometrics_spark.scoring.algebraic import compute_sentiment_algebraic
+    from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
 
-    sent = compute_sentiment_algebraic(pages, Lexicons(lex=lexicons.lex), "counts")
+    sent = compute_sentiment_udf(pages, Lexicons(lex=lexicons.lex), "counts", mode="unigram")
     n_docs = pages.count()
     top = peakdocs(sent, 0.1, type="both").toPandas()
     assert 0 < len(top) <= int(n_docs * 0.15) + 5

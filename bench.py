@@ -165,10 +165,12 @@ def run_benchmarks(cpus: int, sf_dir: str, q1_only: bool = False) -> dict:
     # q8: fused scoring + map-side bucket pre-aggregation (the 100TB path:
     # the shuffle sees per-batch partials, not per-doc long rows)
     def q8():
-        from sentometrics_spark.scoring.fused import finalize_partials, score_to_bucket_partials
+        from sentometrics_spark.aggregate.tiers import rollup
+        from sentometrics_spark.scoring.fused import score_to_bucket_partials
 
-        return force(finalize_partials(
-            score_to_bucket_partials(pages, lex_nv, "proportional", "proportional", by="hour")
+        return force(rollup(
+            score_to_bucket_partials(pages, lex_nv, "proportional", "proportional", by="hour"),
+            "hour",
         ))
 
     def _attrib_docs_bench():
@@ -800,8 +802,9 @@ def main() -> None:
         # child process for --scaling: one timed fused run on a parquet src
         src = [a.split("=", 1)[1] for a in sys.argv if a.startswith("--src=")][0]
         cpus = int([a.split("=", 1)[1] for a in sys.argv if a.startswith("--cpus=")][0])
+        from sentometrics_spark.aggregate.tiers import rollup
         from sentometrics_spark.lexicons import Lexicons, fixture_lexicons
-        from sentometrics_spark.scoring.fused import finalize_partials, score_to_bucket_partials
+        from sentometrics_spark.scoring.fused import score_to_bucket_partials
 
         spark = get_spark(cpus)
         spark.sparkContext.setLogLevel("ERROR")
@@ -810,12 +813,13 @@ def main() -> None:
         lex = Lexicons(lex=fixture_lexicons().lex)
 
         def run():
-            return force(finalize_partials(
-                score_to_bucket_partials(pages, lex, "proportional", "proportional", by="hour")))
+            return force(rollup(
+                score_to_bucket_partials(pages, lex, "proportional", "proportional", by="hour"),
+                "hour"))
 
         # warm-up on a slice: spawn workers + JIT before the timed run
-        force(finalize_partials(score_to_bucket_partials(
-            pages.limit(4000), lex, "proportional", "proportional", by="hour")))
+        force(rollup(score_to_bucket_partials(
+            pages.limit(4000), lex, "proportional", "proportional", by="hour"), "hour"))
         best = float("inf")
         for _ in range(int(os.environ.get("SPARK_GRAFT_SCALE_INNER", "2"))):
             t0 = time.time()

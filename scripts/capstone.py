@@ -36,7 +36,7 @@ def main() -> None:
     from sentometrics_spark.aggregate.time_agg import aggregate_time, measures_fill
     from sentometrics_spark.config import TimeKernelSpec
     from sentometrics_spark.lexicons import Lexicons, fixture_lexicons
-    from sentometrics_spark.scoring.fused import finalize_partials, score_to_bucket_partials
+    from sentometrics_spark.scoring.fused import score_to_bucket_partials
     from sentometrics_spark.storage.gorilla import compress_series_df
     from pyspark.sql import functions as F
 
@@ -56,8 +56,8 @@ def main() -> None:
 
     # stage 1: the only stage that touches documents
     t0 = time.time()
-    hour = finalize_partials(
-        score_to_bucket_partials(pages, lex, "proportional", "proportional", by="hour")
+    hour = rollup(
+        score_to_bucket_partials(pages, lex, "proportional", "proportional", by="hour"), "hour"
     )
     store.write("hour", hour)
     t1 = time.time() - t0

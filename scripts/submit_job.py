@@ -3,12 +3,13 @@
     spark-submit --py-files dist/sentometrics_spark.zip scripts/submit_job.py \
         --input <pages table/path> --output <tier root> \
         [--format iceberg|parquet] [--how-within proportional] \
-        [--how-docs proportional] [--salts 16] [--resume-root <ckpt root>]
+        [--how-docs proportional] [--resume-root <ckpt root>]
 
 Reads the Common-Crawl-style pages table, scores it with the Arrow-UDF
-engine, builds the hour->day->week->month tier tables with salted two-phase
-aggregation, writes them partitioned by bucket_date, and records the
-per-partition checkpoint manifest so a rerun resumes from where it stopped.
+engine, builds the hour->day->week->month tier tables (tiers.build_all_tiers,
+exact for all five doc weighting schemes), writes them partitioned by
+bucket_date, and records the per-partition checkpoint manifest so a rerun
+resumes from where it stopped.
 """
 
 from __future__ import annotations
@@ -25,14 +26,14 @@ def main() -> None:
     ap.add_argument("--format", default="parquet", choices=["parquet", "iceberg"])
     ap.add_argument("--how-within", default="proportional")
     ap.add_argument("--how-docs", default="proportional")
-    ap.add_argument("--salts", type=int, default=16)
     ap.add_argument("--resume-root", default=None)
     ap.add_argument("--master", default=None, help="only for local testing; spark-submit sets this")
     ap.add_argument("--driver-memory", default=None, help="only for local testing")
     args = ap.parse_args()
 
-    from sentometrics_spark.aggregate.doc_agg import aggregate_docs_salted
-    from sentometrics_spark.aggregate.tiers import TierStore, rollup
+    from pyspark import StorageLevel
+
+    from sentometrics_spark.aggregate.tiers import TierStore, build_all_tiers
     from sentometrics_spark.corpus import validate_corpus
     from sentometrics_spark.lexicons import fixture_lexicons
     from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
@@ -65,13 +66,14 @@ def main() -> None:
     else:
         metrics = {}
 
-    hour = aggregate_docs_salted(sent, by="hour", how=args.how_docs, n_salts=args.salts)
+    tiers = build_all_tiers(sent, args.how_docs)
+    # hour and day feed the coarser tiers: keep these panel-sized tables so
+    # each write re-aggregates them instead of rescoring the documents
+    tiers["hour"].persist(StorageLevel.MEMORY_AND_DISK)
+    tiers["day"].persist(StorageLevel.MEMORY_AND_DISK)
     store = TierStore(spark, args.output, fmt=args.format if args.format == "parquet" else "parquet")
-    store.write("hour", hour)
-    day = rollup(store.read("hour"), "day")
-    store.write("day", day)
-    store.write("week", rollup(store.read("day"), "week"))
-    store.write("month", rollup(store.read("day"), "month"))
+    for name, tier in tiers.items():
+        store.write(name, tier)
 
     metrics["wall_sec"] = round(time.time() - t0, 1)
     print(json.dumps(metrics))

@@ -22,16 +22,22 @@ feature) NON-NULL set — denominators differ per measure column, the #1
 source of subtle mismatches.
 
 Output keeps the partial-sum pair (wsum = sum num*s, wden = sum num) so
-higher tiers compose exactly for the doc-local schemes; ``value`` is the
+higher tiers compose exactly for the doc-local schemes (tiers.base_tier
+keeps affine partials for the bucket-relative ones); ``value`` is the
 finalized ratio with the reference's sum(na.rm=TRUE)-over-empty => 0 edge
 (coalesce to 0.0).
+
+Skew: a hot bucket (a viral domain/hour) does not funnel its rows into one
+reducer, because the groupBy aggregates map-side (partial_sum) before it
+shuffles — each map task ships at most one partial row per (bucket,
+lexicon, feature) key it saw (pinned by
+test_plans::test_doc_aggregation_skew_ships_partials).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 BUCKET_FNS = {"hour", "day", "week", "month", "year"}
 
@@ -54,6 +60,17 @@ def bucket_col(ts: Column, by: str) -> Column:
     if by not in BUCKET_FNS:
         raise ValueError(f"unknown bucket: {by}")
     return F.date_trunc(by, ts)
+
+
+def bucket_word_count(s: DataFrame, alias: str = "__bucket_wc") -> DataFrame:
+    """WC_bucket: per-bucket total word count over distinct documents of a
+    bucket_ts-stamped sentiment frame."""
+    return (
+        s.select("url", "bucket_ts", "word_count")
+        .distinct()
+        .groupBy("bucket_ts")
+        .agg(F.sum("word_count").cast("double").alias(alias))
+    )
 
 
 def _weight_numerator(how: str, alpha: float) -> Column:
@@ -87,16 +104,8 @@ def aggregate_docs(
     [, wsum, wden])."""
     s = sentiment.withColumn("bucket_ts", bucket_col(F.col("warc_ts"), by))
 
-    needs_bucket_wc = how in ("exponential", "inverseExponential")
-    if needs_bucket_wc:
-        # per-bucket total word count over distinct documents
-        doc_wc = (
-            s.select("url", "bucket_ts", "word_count")
-            .distinct()
-            .groupBy("bucket_ts")
-            .agg(F.sum("word_count").cast("double").alias("__bucket_wc"))
-        )
-        s = s.join(doc_wc, "bucket_ts")
+    if how in ("exponential", "inverseExponential"):
+        s = s.join(bucket_word_count(s), "bucket_ts")
 
     score = _ignore_zeros(F.col("score")) if do_ignore_zeros else F.col("score")
     num = _weight_numerator(how, alpha)
@@ -110,75 +119,6 @@ def aggregate_docs(
     )
     agg = agg.withColumn(
         "value", F.coalesce(F.try_divide(F.col("wsum"), F.col("wden")), F.lit(0.0))
-    )
-    cols = ["bucket_ts", *MEASURE_KEYS, "value"]
-    if keep_partials:
-        cols += ["wsum", "wden", "n_docs_in", "n_docs"]
-    return agg.select(*cols)
-
-
-def aggregate_docs_salted(
-    sentiment: DataFrame,
-    by: str = "day",
-    how: str = "equal_weight",
-    do_ignore_zeros: bool = True,
-    alpha: float = 0.1,
-    n_salts: int = 16,
-    keep_partials: bool = True,
-) -> DataFrame:
-    """Skew-safe A4 (north rule): hot buckets (a viral domain/hour at
-    Common-Crawl scale) overload single reducers in the plain
-    groupBy(bucket, lexicon, feature). Classic two-phase aggregation:
-
-      phase 1: groupBy(bucket, lexicon, feature, salt) partial sums,
-               salt = pmod(xxhash64(url), n_salts) — deterministic, so a
-               retried task lands in the same salt bucket;
-      phase 2: de-salt with a second (tiny) aggregation of the partials.
-
-    Exactness: identical to aggregate_docs because the weight numerators are
-    doc-local or depend only on bucket totals computed separately — partial
-    sums re-associate. Not available for the bucket-relative exponential
-    schemes' denominators? They are: __bucket_wc is computed with its own
-    salted two-phase sum below."""
-    if how not in ("equal_weight", "proportional", "inverseProportional",
-                   "exponential", "inverseExponential"):
-        raise ValueError(f"unknown docs how: {how}")
-    s = sentiment.withColumn("bucket_ts", bucket_col(F.col("warc_ts"), by))
-    salt = F.pmod(F.xxhash64("url"), F.lit(n_salts)).alias("__salt")
-
-    if how in ("exponential", "inverseExponential"):
-        doc_wc = (
-            s.select("url", "bucket_ts", "word_count")
-            .distinct()
-            .withColumn("__salt", salt)
-            .groupBy("bucket_ts", "__salt")
-            .agg(F.sum("word_count").cast("double").alias("__wc_part"))
-            .groupBy("bucket_ts")
-            .agg(F.sum("__wc_part").alias("__bucket_wc"))
-        )
-        s = s.join(doc_wc, "bucket_ts")
-
-    score = _ignore_zeros(F.col("score")) if do_ignore_zeros else F.col("score")
-    num = _weight_numerator(how, alpha)
-    num_eff = F.when(score.isNotNull(), num)
-
-    phase1 = s.withColumn("__salt", salt).groupBy(
-        "bucket_ts", *MEASURE_KEYS, "__salt"
-    ).agg(
-        F.sum(num_eff * score).alias("wsum"),
-        F.sum(num_eff).alias("wden"),
-        F.count(F.when(score.isNotNull(), 1)).alias("n_docs_in"),
-        F.count("*").alias("n_docs"),
-    )
-    agg = (
-        phase1.groupBy("bucket_ts", *MEASURE_KEYS)
-        .agg(
-            F.sum("wsum").alias("wsum"),
-            F.sum("wden").alias("wden"),
-            F.sum("n_docs_in").alias("n_docs_in"),
-            F.sum("n_docs").alias("n_docs"),
-        )
-        .withColumn("value", F.coalesce(F.try_divide(F.col("wsum"), F.col("wden")), F.lit(0.0)))
     )
     cols = ["bucket_ts", *MEASURE_KEYS, "value"]
     if keep_partials:
@@ -264,13 +204,7 @@ def with_doc_weights(
     assumption as measures_fill's grid spine)."""
     s = sentiment_bucketed
     if how in ("exponential", "inverseExponential"):
-        doc_wc = (
-            s.select("url", "bucket_ts", "word_count")
-            .distinct()
-            .groupBy("bucket_ts")
-            .agg(F.sum("word_count").cast("double").alias("__bucket_wc"))
-            .withColumnRenamed("bucket_ts", "__wc_bucket_ts")
-        )
+        doc_wc = bucket_word_count(s).withColumnRenamed("bucket_ts", "__wc_bucket_ts")
         # null-SAFE equi-join (ADVICE r5): groupBy keeps the NULL-bucket
         # group, and <=> lets those rows pick their denominator up — a
         # plain equi-join dropped NULL-bucket rows here before the

@@ -3,27 +3,35 @@ with retention (north rule; no reference equivalent — the reference
 aggregates once per requested ``by``).
 
 Exactness contract: the document-aggregation value is a weighted mean
-value = sum(num_d * s_d) / sum(num_d). For the doc-LOCAL weighting schemes
-(equal_weight, proportional, inverseProportional) the numerator num_d
-depends only on the document, so partial-sum pairs (wsum, wden) compose
-exactly across tiers:
+value = sum(num_d * s_d) / sum(num_d). Every tier row carries partial sums
+that merge by plain addition across buckets, so a coarser tier is a pure
+re-aggregation of a finer one and equals direct aggregation at the coarser
+bucket (bit-for-bit up to float associativity). Which partials a tier
+keeps depends on the weighting scheme:
 
-    day.wsum = sum(hour.wsum),  day.wden = sum(hour.wden)
-    day.value = day.wsum / day.wden  == direct day aggregation (bit-for-bit
-    up to float associativity)
+  - doc-LOCAL schemes (equal_weight, proportional, inverseProportional):
+    num_d depends only on the document, so the pair (wsum, wden) composes:
 
-The bucket-RELATIVE schemes (exponential, inverseExponential — num depends
-on the bucket's total word count) are NOT composable from (wsum, wden)
-alone; ``rollup`` refuses them. They ARE composable from a richer partial
-set because num_d = 10a*(wc_d/W - 1) is AFFINE in wc_d: retaining per
-(bucket, lexicon, feature) the sums (s_sum = sum s_d, wcs_sum = sum wc_d*s_d,
-wc_in = sum wc_d, n_in) over the non-null set, plus the bucket total word
-count W, any coarser bucket B' with W' = sum W recombines exactly:
+        day.wsum = sum(hour.wsum),  day.wden = sum(hour.wden)
+        day.value = day.wsum / day.wden
 
-    sum num*s = (c/W')*wcs_sum - c*s_sum
-    sum num   = (c/W')*wc_in   - c*n_in        (c = 10*alpha)
+  - bucket-RELATIVE schemes (exponential, inverseExponential): num_d =
+    c*(wc_d/W - 1) depends on the bucket's total word count W, so
+    (wsum, wden) does not compose. num_d is AFFINE in wc_d, though:
+    retaining per (bucket, lexicon, feature) the sums (s_sum = sum s_d,
+    wcs_sum = sum wc_d*s_d, wc_in = sum wc_d, n_in) over the non-null set,
+    plus W itself (bucket_wc), any coarser bucket with W' = sum W
+    recombines exactly:
 
-— see base_tier_exponential / rollup_exponential.
+        sum num*s = (c/W')*wcs_sum - c*s_sum
+        sum num   = (c/W')*wc_in   - c*n_in
+
+    c = 10*alpha cancels in the ratio (as does inverseExponential's sign
+    flip), so the value is computed with c = 1.
+
+``base_tier`` picks the partial set from the scheme and ``rollup`` picks it
+from the input's columns (``bucket_wc`` present = affine partials), so
+``build_all_tiers`` and ``refresh_continuous`` serve all five schemes.
 
 Tier storage layout (TierStore): one partitioned parquet/Iceberg table per
 tier, partitioned by bucket_date for partition-pruned reads and
@@ -34,16 +42,50 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sentometrics_spark.aggregate.doc_agg import MEASURE_KEYS, aggregate_docs
+from sentometrics_spark.aggregate.doc_agg import (
+    MEASURE_KEYS,
+    _ignore_zeros,
+    aggregate_docs,
+    bucket_col,
+    bucket_word_count,
+)
 
 TIER_ORDER = ["hour", "day", "week", "month"]
 
-COMPOSABLE_DOC_HOWS = ("equal_weight", "proportional", "inverseProportional")
-
 PARTIAL_COLS = ["wsum", "wden", "n_docs_in", "n_docs"]
+
+EXP_PARTIAL_COLS = ["s_sum", "wcs_sum", "wc_in", "n_docs_in", "n_docs", "bucket_wc"]
+
+
+def partial_cols(tier: DataFrame) -> list[str]:
+    """The partial sums a tier carries: the affine exponential set when it
+    has ``bucket_wc``, the (wsum, wden) set otherwise."""
+    return EXP_PARTIAL_COLS if "bucket_wc" in tier.columns else PARTIAL_COLS
+
+
+def _value(pcols: list[str]) -> Column:
+    """The finalized weighted mean of a partial set; an empty non-null set
+    gives 0.0 (the reference's sum(na.rm=TRUE)-over-empty edge)."""
+    if "bucket_wc" not in pcols:
+        return F.coalesce(F.try_divide(F.col("wsum"), F.col("wden")), F.lit(0.0))
+    # ((1/W)*wcs_sum - s_sum) / ((1/W)*wc_in - n_in). Guard W = 0 (a
+    # bucket whose docs all tokenized to zero words): 1/0 = Inf and
+    # Inf*0 = NaN would pass try_divide/coalesce — such a bucket has no
+    # weighable docs, so value = 0.0
+    w = F.col("bucket_wc")
+    inv_w = F.when(w > 0, F.lit(1.0) / w)
+    num = inv_w * F.col("wcs_sum") - F.col("s_sum")
+    den = inv_w * F.col("wc_in") - F.col("n_docs_in")
+    return F.coalesce(F.try_divide(num, den), F.lit(0.0))
+
+
+def _finalize(agg: DataFrame, pcols: list[str]) -> DataFrame:
+    return agg.withColumn("value", _value(pcols)).select(
+        "bucket_ts", *MEASURE_KEYS, "value", *pcols
+    )
 
 
 def base_tier(
@@ -52,79 +94,14 @@ def base_tier(
     do_ignore_zeros: bool = True,
     by: str = "hour",
 ) -> DataFrame:
-    """Finest tier straight from doc-level sentiment, carrying partials."""
-    if how not in COMPOSABLE_DOC_HOWS:
-        raise ValueError(
-            f"doc weighting '{how}' is bucket-relative and not tier-composable; "
-            f"use one of {COMPOSABLE_DOC_HOWS} or aggregate each tier directly"
+    """Finest tier straight from doc-level sentiment, carrying the partials
+    that make coarser tiers exact (see module docstring)."""
+    if how not in ("exponential", "inverseExponential"):
+        return aggregate_docs(
+            sentiment, by=by, how=how, do_ignore_zeros=do_ignore_zeros, keep_partials=True
         )
-    return aggregate_docs(
-        sentiment, by=by, how=how, do_ignore_zeros=do_ignore_zeros, keep_partials=True
-    )
-
-
-def rollup(lower_tier: DataFrame, to: str) -> DataFrame:
-    """Compose the next tier from a finer tier's partial sums. A pure
-    re-aggregation — no rescan of documents."""
-    if to not in TIER_ORDER:
-        raise ValueError(f"unknown tier: {to}")
-    agg = (
-        lower_tier.groupBy(
-            F.date_trunc(to, F.col("bucket_ts")).alias("bucket_ts"), *MEASURE_KEYS
-        )
-        .agg(
-            F.sum("wsum").alias("wsum"),
-            F.sum("wden").alias("wden"),
-            F.sum("n_docs_in").alias("n_docs_in"),
-            F.sum("n_docs").alias("n_docs"),
-        )
-        .withColumn("value", F.coalesce(F.try_divide(F.col("wsum"), F.col("wden")), F.lit(0.0)))
-    )
-    return agg.select("bucket_ts", *MEASURE_KEYS, "value", *PARTIAL_COLS)
-
-
-EXP_PARTIAL_COLS = ["s_sum", "wcs_sum", "wc_in", "n_docs_in", "n_docs", "bucket_wc"]
-
-
-def _exp_value(c: float):
-    """value = ((c/W)*wcs_sum - c*s_sum) / ((c/W)*wc_in - c*n_in), the
-    weighted mean under num_d = c*(wc_d/W - 1) re-expanded from partials.
-    (inverseExponential negates every num_d, which cancels in the ratio —
-    the reference's two schemes produce identical weighted means; formulas
-    /root/reference/R/sentomeasures_main.R:553-576.)"""
-    # guard bucket_wc = 0 (a bucket whose docs all tokenized to zero
-    # words): c/0 = Inf and Inf*0 = NaN, which try_divide/coalesce would
-    # pass through — such a bucket has no weighable docs, so value = 0.0
-    w = F.col("bucket_wc")
-    cw = F.when(w > 0, F.lit(c) / w)
-    num = cw * F.col("wcs_sum") - F.lit(c) * F.col("s_sum")
-    den = cw * F.col("wc_in") - F.lit(c) * F.col("n_docs_in")
-    return F.coalesce(F.try_divide(num, den), F.lit(0.0))
-
-
-def base_tier_exponential(
-    sentiment: DataFrame,
-    by: str = "hour",
-    alpha: float = 0.1,
-    do_ignore_zeros: bool = True,
-) -> DataFrame:
-    """Finest tier for the bucket-relative exponential/inverseExponential
-    doc weighting, carrying the affine partials that make coarser tiers
-    exact (see module docstring)."""
-    from sentometrics_spark.aggregate.doc_agg import ZERO_EPS, bucket_col
-
     s = sentiment.withColumn("bucket_ts", bucket_col(F.col("warc_ts"), by))
-    doc_wc = (
-        s.select("url", "bucket_ts", "word_count")
-        .distinct()
-        .groupBy("bucket_ts")
-        .agg(F.sum("word_count").cast("double").alias("bucket_wc"))
-    )
-    score = (
-        F.when(F.abs(F.col("score")) < ZERO_EPS, F.lit(None)).otherwise(F.col("score"))
-        if do_ignore_zeros
-        else F.col("score")
-    )
+    score = _ignore_zeros(F.col("score")) if do_ignore_zeros else F.col("score")
     wc = F.col("word_count").cast("double")
     agg = (
         s.withColumn("__s", score)
@@ -136,28 +113,22 @@ def base_tier_exponential(
             F.count(F.when(F.col("__s").isNotNull(), 1)).alias("n_docs_in"),
             F.count("*").alias("n_docs"),
         )
-        .join(doc_wc, "bucket_ts")
+        .join(bucket_word_count(s, "bucket_wc"), "bucket_ts")
         .na.fill(0.0, ["s_sum", "wcs_sum", "wc_in"])
     )
-    c = 10.0 * alpha
-    return agg.withColumn("value", _exp_value(c)).select(
-        "bucket_ts", *MEASURE_KEYS, "value", *EXP_PARTIAL_COLS
-    )
+    return _finalize(agg, EXP_PARTIAL_COLS)
 
 
-def rollup_exponential(lower_tier: DataFrame, to: str, alpha: float = 0.1) -> DataFrame:
-    """Compose the next tier for exponential doc weighting from the affine
-    partials — no rescan of documents; exactly equals direct aggregation at
-    the coarser bucket."""
+def rollup(lower_tier: DataFrame, to: str) -> DataFrame:
+    """Compose the next tier from a finer tier's partial sums (either
+    partial set). A pure re-aggregation — no rescan of documents."""
     if to not in TIER_ORDER:
         raise ValueError(f"unknown tier: {to}")
+    pcols = partial_cols(lower_tier)
     agg = lower_tier.groupBy(
         F.date_trunc(to, F.col("bucket_ts")).alias("bucket_ts"), *MEASURE_KEYS
-    ).agg(*[F.sum(col).alias(col) for col in EXP_PARTIAL_COLS])
-    c = 10.0 * alpha
-    return agg.withColumn("value", _exp_value(c)).select(
-        "bucket_ts", *MEASURE_KEYS, "value", *EXP_PARTIAL_COLS
-    )
+    ).agg(*[F.sum(c).alias(c) for c in pcols])
+    return _finalize(agg, pcols)
 
 
 def build_all_tiers(
@@ -179,15 +150,14 @@ def build_all_tiers(
 def refresh_continuous(
     store: "TierStore",
     new_hour_partials: DataFrame,
-    exponential: bool = False,
-    alpha: float = 0.1,
     pre_hour: DataFrame | None = None,
 ) -> dict[str, int]:
     """Incrementally fold a batch of NEW hour-tier partial rows (from
-    base_tier / base_tier_exponential on newly ingested documents — a
-    disjoint document set from what the store already holds) into the
-    stored hour/day/week/month continuous aggregates, re-materializing ONLY
-    the partitions the batch touches.
+    base_tier on newly ingested documents — a disjoint document set from
+    what the store already holds) into the stored hour/day/week/month
+    continuous aggregates, re-materializing ONLY the partitions the batch
+    touches. Either partial set works (bucket_wc partials sum too, because
+    the batch's documents are new).
 
     This is the TimescaleDB-style continuous-aggregate refresh re-expressed
     for Spark: the dirty set is derived from the batch's bucket dates (a
@@ -200,13 +170,8 @@ def refresh_continuous(
     """
     import datetime as dt
 
-    pcols = EXP_PARTIAL_COLS if exponential else PARTIAL_COLS
+    pcols = partial_cols(new_hour_partials)
     norm = lambda df: df.select("bucket_ts", *MEASURE_KEYS, *pcols)
-    roll = (
-        (lambda df, to: rollup_exponential(norm(df), to, alpha))
-        if exponential
-        else (lambda df, to: rollup(norm(df), to))
-    )
 
     dirty_dates = sorted(
         r["d"]
@@ -224,23 +189,23 @@ def refresh_continuous(
     # function of staged inputs, so a crashed apply can be retried without
     # double-counting (streaming.apply_refresh_exactly_once).
     if pre_hour is not None:
-        merged = roll(norm(pre_hour).unionByName(norm(new_hour_partials)), "hour")
+        merged = rollup(norm(pre_hour).unionByName(norm(new_hour_partials)), "hour")
     elif store.exists("hour"):
         existing = store.read_dates("hour", dirty_dates)
-        merged = roll(norm(existing).unionByName(norm(new_hour_partials)), "hour")
+        merged = rollup(norm(existing).unionByName(norm(new_hour_partials)), "hour")
     else:
-        merged = roll(new_hour_partials, "hour")
+        merged = rollup(new_hour_partials, "hour")
     store.upsert_partitions("hour", merged)
 
     # day: rebuild exactly the dirty day buckets from the dirty hour
     # partitions (day partitions are keyed by the same dates)
-    store.upsert_partitions("day", roll(store.read_dates("hour", dirty_dates), "day"))
+    store.upsert_partitions("day", rollup(store.read_dates("hour", dirty_dates), "day"))
 
     # week / month: rebuild the straddled coarse buckets from ALL day rows
     # inside them (partition-pruned by the literal date lists)
     week_starts = sorted({d - dt.timedelta(days=d.weekday()) for d in dirty_dates})
     week_days = [ws + dt.timedelta(days=i) for ws in week_starts for i in range(7)]
-    store.upsert_partitions("week", roll(store.read_dates("day", week_days), "week"))
+    store.upsert_partitions("week", rollup(store.read_dates("day", week_days), "week"))
 
     month_starts = sorted({d.replace(day=1) for d in dirty_dates})
     month_days = []
@@ -249,7 +214,7 @@ def refresh_continuous(
         month_days.extend(
             ms + dt.timedelta(days=i) for i in range((nxt - ms).days)
         )
-    store.upsert_partitions("month", roll(store.read_dates("day", month_days), "month"))
+    store.upsert_partitions("month", rollup(store.read_dates("day", month_days), "month"))
 
     return {
         "hour": len(dirty_dates),

@@ -1200,35 +1200,16 @@ def q_agg_day_inv_exponential(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _agg_docs_query("inverseExponential", "day")(spark, sf_dir)
 
 
-def q_agg_day_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4 skew path: the salted two-phase aggregation must be BIT-EXACT
-    vs the plain groupBy (same oracle SQL as agg_day_proportional) — the
-    partial-sum pairs commute, so salting changes only the shuffle shape,
-    never the value."""
-    from sentometrics_spark.aggregate.doc_agg import aggregate_docs_salted
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    pages = build_pages(spark, sf_dir, with_html=False)
-    sent = compute_sentiment_udf(pages, _no_valence(), "proportional", mode="unigram")
-    m = aggregate_docs_salted(
-        sent, by="day", how="proportional", do_ignore_zeros=True,
-        n_salts=16, keep_partials=False,
-    )
-    return _fmt_ts(m, "bucket_ts").select(
-        "bucket_ts", "lexicon", "feature", _r6("value").alias("value")
-    )
-
-
 def q_tier_day_from_hour_exp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponential doc-weighting tier composability: day tier composed from
     hour-tier AFFINE partials must equal direct day aggregation (oracle)."""
-    from sentometrics_spark.aggregate.tiers import base_tier_exponential, rollup_exponential
+    from sentometrics_spark.aggregate.tiers import base_tier, rollup
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     pages = build_pages(spark, sf_dir, with_html=False)
     sent = compute_sentiment_udf(pages, _no_valence(), "proportional", mode="unigram")
-    hour = base_tier_exponential(sent, by="hour", alpha=0.1)
-    day = rollup_exponential(hour, "day", alpha=0.1)
+    hour = base_tier(sent, "exponential", by="hour")
+    day = rollup(hour, "day")
     return _fmt_ts(day, "bucket_ts").select(
         "bucket_ts", "lexicon", "feature", _r6("value").alias("value")
     )
@@ -4335,7 +4316,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # doc aggregation (A1-A4)
         "agg_day_equal": _agg_docs_query("equal_weight", "day"),
         "agg_day_proportional": _agg_docs_query("proportional", "day"),
-        "agg_day_salted": q_agg_day_salted,
+        # the salted two-phase variant was removed (map-side partial_sum
+        # already bounds a hot bucket's shuffle); the key stays in the
+        # contract and runs the plain aggregation it always had to equal
+        "agg_day_salted": _agg_docs_query("proportional", "day"),
         "agg_week_inv_proportional": _agg_docs_query("inverseProportional", "week"),
         "agg_month_exponential": _agg_docs_query("exponential", "month"),
         "agg_hour_equal": _agg_docs_query("equal_weight", "hour"),

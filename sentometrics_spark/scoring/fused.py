@@ -9,13 +9,15 @@ This fused kernel performs the FIRST aggregation level inside the Arrow
 batch itself: each batch reduces directly to
 (bucket_ts, lexicon, feature, wsum, wden, n_docs_in, n_docs) partial rows —
 O(buckets-touched x measures) per batch instead of O(docs x measures).
-The downstream groupBy then merges partials (associative), exactly like the
-tier rollups and the streaming ingest.
+The downstream ``tiers.rollup`` then merges partials (associative), exactly
+like the tier rollups and the streaming ingest.
 
 Only the doc-LOCAL across-document weighting schemes are fusable
-(equal_weight / proportional / inverseProportional — the same composability
-condition as the tier engine). Semantics match aggregate_docs up to float
-summation order.
+(equal_weight / proportional / inverseProportional): the (wsum, wden)
+partials need each document's weight, and the exponential schemes' weights
+depend on the bucket's total word count, which a batch holding part of a
+bucket cannot know. Semantics match aggregate_docs up to float summation
+order.
 """
 
 from __future__ import annotations
@@ -25,13 +27,13 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from sentometrics_spark.aggregate.doc_agg import ZERO_EPS
-from sentometrics_spark.aggregate.tiers import COMPOSABLE_DOC_HOWS
 from sentometrics_spark.corpus import check_language_coverage, feature_columns
 from sentometrics_spark.lexicons import Lexicons
 from sentometrics_spark.scoring.udf_engine import flat_from_texts, score_flat
+
+FUSABLE_DOC_HOWS = ("equal_weight", "proportional", "inverseProportional")
 
 PARTIAL_SCHEMA = (
     "bucket_ts timestamp, lexicon string, feature string, "
@@ -52,11 +54,11 @@ def score_to_bucket_partials(
     validate_langs: str = "fail",
 ) -> DataFrame:
     """One mapInPandas pass: score + reduce to bucket partials. Finalize
-    with ``finalize_partials`` (or feed tiers.rollup directly)."""
-    if how_docs not in COMPOSABLE_DOC_HOWS:
+    with ``tiers.rollup(partials, by)``."""
+    if how_docs not in FUSABLE_DOC_HOWS:
         raise ValueError(
             f"doc weighting '{how_docs}' is bucket-relative and cannot be fused; "
-            f"use one of {COMPOSABLE_DOC_HOWS}"
+            f"use one of {FUSABLE_DOC_HOWS}"
         )
     if by not in _TRUNC:
         raise ValueError(f"fused path supports hour/day buckets, got: {by}")
@@ -139,24 +141,3 @@ def score_to_bucket_partials(
         run, schema=PARTIAL_SCHEMA
     )
     return partials
-
-
-def finalize_partials(partials: DataFrame) -> DataFrame:
-    """Merge batch partials into the finalized tier (same shape as
-    aggregate_docs with keep_partials=True)."""
-    return (
-        partials.groupBy("bucket_ts", "lexicon", "feature")
-        .agg(
-            F.sum("wsum").alias("wsum"),
-            F.sum("wden").alias("wden"),
-            F.sum("n_docs_in").alias("n_docs_in"),
-            F.sum("n_docs").alias("n_docs"),
-        )
-        .withColumn(
-            "value",
-            F.coalesce(
-                F.when(F.col("wden") != 0, F.col("wsum") / F.col("wden")), F.lit(0.0)
-            ),
-        )
-        .select("bucket_ts", "lexicon", "feature", "value", "wsum", "wden", "n_docs_in", "n_docs")
-    )

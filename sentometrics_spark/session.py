@@ -21,8 +21,8 @@ def build_session(
     confs = {
         # UTC everywhere: bucket timestamps must not depend on driver TZ
         "spark.sql.session.timeZone": "UTC",
-        # AQE: runtime coalescing + skew-join splitting supplements the
-        # engine's deterministic groupBy salting
+        # AQE: runtime coalescing + skew-join splitting; skewed groupBys
+        # need no help — they aggregate map-side before the shuffle
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",

@@ -1,5 +1,5 @@
 """Structured Streaming ingestion: micro-batch scoring of incoming pages
-into the hour-tier continuous aggregate.
+into the tier continuous aggregates.
 
 The reference is batch-only; its incremental hook is ``measures_update``
 (anti-join new ids, /root/reference/R/sentomeasures_measures_xyz.R:158-176).
@@ -7,17 +7,19 @@ Our streaming design keeps the reference's DETERMINISTIC-RECOMPUTE
 semantics for late data instead of watermark-dropping:
 
   - every micro-batch scores its documents (same Arrow UDF as batch) and
-    appends (bucket_ts, lexicon, feature, wsum, wden, n_docs...) PARTIAL
-    rows to the hour-tier partials table;
-  - partials are associative (doc-local weight numerators), so the
-    finalized tier value is sum(wsum)/sum(wden) over all partial rows of a
-    bucket — a late document just adds one more partial row, and the bucket
-    is exact again at next read. No state store required, arbitrarily late
-    data folds in, and a compaction pass (rollup on the partials) keeps the
-    table small;
+    builds base_tier PARTIAL rows for the buckets it touches — either
+    appended to a partials table (stream_events_tier with a score +
+    base_tier ``tier_fn``) or folded into a TierStore
+    (stream_refresh_tiers);
+  - partials merge by addition for every doc weighting scheme, so the
+    finalized hour tier is ``tiers.rollup(spark.read.parquet(path),
+    "hour")`` — a late document just adds one more partial row, and the
+    bucket is exact again at next read. No state store required,
+    arbitrarily late data folds in, and a compaction pass
+    (compact_partials) keeps the table small;
   - coarser tiers keep reading from the hour tier exactly as in batch.
 
-This mirrors the batch tier engine bit-for-bit: reading the partials table
+This mirrors the batch tier engine bit-for-bit: the partials table
 finalized equals base_tier() on the union of all micro-batch inputs.
 """
 
@@ -26,48 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sentometrics_spark.aggregate.doc_agg import MEASURE_KEYS
-from sentometrics_spark.aggregate.tiers import base_tier
+from sentometrics_spark.aggregate.tiers import base_tier, rollup
 from sentometrics_spark.lexicons import Lexicons
 from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
-
-
-def stream_to_hour_tier(
-    pages_stream: DataFrame,
-    lexicons: Lexicons,
-    partials_path: str,
-    checkpoint_path: str,
-    how_within: str = "proportional",
-    how_docs: str = "proportional",
-    do_ignore_zeros: bool = True,
-    trigger_available_now: bool = True,
-):
-    """Start the micro-batch query appending hour-tier partials."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sent = compute_sentiment_udf(batch_df, lexicons, how_within, mode="unigram")
-        partials = base_tier(sent, how=how_docs, do_ignore_zeros=do_ignore_zeros, by="hour")
-        # partitioned by batch_id + dynamic overwrite => a foreachBatch
-        # REPLAY (at-least-once restart) rewrites its own partition instead
-        # of appending duplicate partial rows: idempotent, hence
-        # effectively exactly-once
-        (
-            partials.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(partials_path)
-        )
-
-    writer = (
-        pages_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_refresh_tiers(
@@ -118,8 +81,6 @@ def apply_refresh_exactly_once(
     store,
     partials: DataFrame,
     batch_id: int,
-    exponential: bool = False,
-    alpha: float = 0.1,
 ) -> bool:
     """Idempotent tier refresh for one micro-batch (exactly-once on top of
     foreachBatch's at-least-once replay).
@@ -175,27 +136,11 @@ def apply_refresh_exactly_once(
 
     new = spark.read.parquet(new_path)
     pre = spark.read.parquet(pre_path)
-    refresh_continuous(store, new, exponential=exponential, alpha=alpha, pre_hour=pre)
+    refresh_continuous(store, new, pre_hour=pre)
     with open(marker, "w"):
         pass
     shutil.rmtree(stage, ignore_errors=True)
     return True
-
-
-def finalize_hour_tier(spark: SparkSession, partials_path: str) -> DataFrame:
-    """Finalized hour tier from the streaming partials: re-associate the
-    partial sums (late/duplicate-bucket rows fold in exactly)."""
-    p = spark.read.parquet(partials_path)
-    return (
-        p.groupBy("bucket_ts", *MEASURE_KEYS)
-        .agg(
-            F.sum("wsum").alias("wsum"),
-            F.sum("wden").alias("wden"),
-            F.sum("n_docs_in").alias("n_docs_in"),
-            F.sum("n_docs").alias("n_docs"),
-        )
-        .withColumn("value", F.coalesce(F.try_divide(F.col("wsum"), F.col("wden")), F.lit(0.0)))
-    )
 
 
 SESSION_OUT_SCHEMA = (
@@ -349,7 +294,7 @@ def compact_partials(spark: SparkSession, partials_path: str) -> None:
     action).
 
     The HIGHEST batch_id partition is left untouched (ADVICE r3): replay
-    idempotence in stream_to_hour_tier relies on a replayed batch
+    idempotence in stream_events_tier relies on a replayed batch
     dynamically overwriting its OWN batch_id partition. If the newest
     batch's checkpoint commit is still pending when compaction runs and
     its rows were folded into the batch_id=-1 partition, a post-restart
@@ -366,30 +311,11 @@ def compact_partials(spark: SparkSession, partials_path: str) -> None:
     max_batch = p.agg(F.max("batch_id")).collect()[0][0]
     if max_batch is None:
         return
-    old = p.filter(F.col("batch_id") != max_batch)
-    newest = p.filter(F.col("batch_id") == max_batch)
-    compacted = (
-        old.groupBy("bucket_ts", *MEASURE_KEYS)
-        .agg(
-            F.sum("wsum").alias("wsum"),
-            F.sum("wden").alias("wden"),
-            F.sum("n_docs_in").alias("n_docs_in"),
-            F.sum("n_docs").alias("n_docs"),
-        )
-        .withColumn(
-            "value", F.coalesce(F.try_divide(F.col("wsum"), F.col("wden")), F.lit(0.0))
-        )
-        .withColumn("batch_id", F.lit(-1))
-        .select(
-            "bucket_ts", *MEASURE_KEYS, "value", "wsum", "wden", "n_docs_in", "n_docs", "batch_id"
-        )
-        .unionByName(
-            newest.select(
-                "bucket_ts", *MEASURE_KEYS, "value", "wsum", "wden",
-                "n_docs_in", "n_docs", "batch_id",
-            )
-        )
+    old = rollup(p.filter(F.col("batch_id") != max_batch), "hour").withColumn(
+        "batch_id", F.lit(-1)
     )
+    newest = p.filter(F.col("batch_id") == max_batch).select(*old.columns)
+    compacted = old.unionByName(newest)
     tmp = partials_path.rstrip("/") + "__compact"
     # keep the batch_id=... partition layout the streaming writer uses, so
     # post-compaction appends land beside it without mixing layouts
@@ -410,13 +336,14 @@ def stream_events_tier(
     counts, HLL distinct sketches, KLL percentile sketches, OHLC partials
     — anything whose per-bucket state merges associatively): each
     micro-batch runs ``tier_fn`` (a batch tier builder, e.g.
-    ``lambda df: bucket_histogram(df, 0, 500, 20, by="hour")``) over the
-    batch only, and appends the result as that batch's partial.
+    ``lambda df: bucket_histogram(df, 0, 500, 20, by="hour")``, or for the
+    sentiment hour tier ``lambda df: base_tier(compute_sentiment_udf(df,
+    lexicons, "proportional"), "proportional", by="hour")``) over the batch
+    only, and appends the result as that batch's partial.
 
-    Same exactly-once shape as stream_to_hour_tier: partials are
-    partitioned by batch_id with dynamic overwrite, so an at-least-once
-    foreachBatch replay rewrites its OWN partition instead of appending
-    duplicates. Finalization (below) merges partials per bucket — late
+    Partials are partitioned by batch_id with dynamic overwrite, so an
+    at-least-once foreachBatch replay rewrites its OWN partition instead of
+    appending duplicates. Finalization (below) merges partials per bucket — late
     events land in whatever bucket their timestamp belongs to and simply
     contribute another mergeable partial; no watermark, nothing dropped.
     """

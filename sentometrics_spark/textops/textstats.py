@@ -422,9 +422,10 @@ def url_duplicates(df: DataFrame, url_col: str = "url", id_col: str = "doc_id") 
 
 def domain_stats(df: DataFrame, url_col: str = "url", text_col: str = "text") -> DataFrame:
     """Per-domain corpus stats for crawl curation: doc count, mean token
-    count, distinct languages. Hot domains are exactly the skewed-key case
-    the salted two-phase aggregation handles (doc_agg.aggregate_docs_salted)
-    — this plain groupBy(domain) is the bounded-cardinality shuffle."""
+    count, distinct languages. Hot domains are the skewed-key case; like
+    doc_agg.aggregate_docs, this plain groupBy(domain) aggregates map-side
+    before it shuffles, so a hot domain ships at most one partial row per
+    (map task, language), never its documents."""
     toks = F.size(F.split(F.col(text_col), " "))
     return (
         df.select(domain_of(url_col).alias("domain"), toks.alias("n"), "lang")

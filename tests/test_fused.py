@@ -6,7 +6,7 @@ import pytest
 from sentometrics_spark.aggregate.doc_agg import aggregate_docs
 from sentometrics_spark.aggregate.tiers import rollup
 from sentometrics_spark.lexicons import Lexicons, fixture_lexicons
-from sentometrics_spark.scoring.fused import finalize_partials, score_to_bucket_partials
+from sentometrics_spark.scoring.fused import score_to_bucket_partials
 from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
 
 KEY = ["bucket_ts", "lexicon", "feature"]
@@ -20,10 +20,11 @@ def lex(lexicons):
 @pytest.mark.parametrize("how_docs", ["equal_weight", "proportional", "inverseProportional"])
 @pytest.mark.parametrize("ignore_zeros", [True, False])
 def test_fused_equals_two_stage(pages, lex, how_docs, ignore_zeros):
-    fused = finalize_partials(
+    fused = rollup(
         score_to_bucket_partials(
             pages, lex, "proportional", how_docs, by="hour", do_ignore_zeros=ignore_zeros
-        )
+        ),
+        "hour",
     )
     sent = compute_sentiment_udf(pages, lex, "proportional", mode="unigram")
     direct = aggregate_docs(
@@ -38,8 +39,8 @@ def test_fused_equals_two_stage(pages, lex, how_docs, ignore_zeros):
 
 
 def test_fused_partials_feed_tiers(pages, lex):
-    hour = finalize_partials(
-        score_to_bucket_partials(pages, lex, "proportional", "proportional", by="hour")
+    hour = rollup(
+        score_to_bucket_partials(pages, lex, "proportional", "proportional", by="hour"), "hour"
     )
     day = rollup(hour, "day")
     sent = compute_sentiment_udf(pages, lex, "proportional", mode="unigram")

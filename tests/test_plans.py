@@ -17,12 +17,10 @@ from contextlib import redirect_stdout
 import pytest
 
 from sentometrics_spark.aggregate.doc_agg import aggregate_docs
+from sentometrics_spark.aggregate.tiers import rollup
 from sentometrics_spark.corpus import build_pages
 from sentometrics_spark.lexicons import Lexicons, fixture_lexicons
-from sentometrics_spark.scoring.fused import (
-    finalize_partials,
-    score_to_bucket_partials,
-)
+from sentometrics_spark.scoring.fused import score_to_bucket_partials
 from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -77,11 +75,12 @@ def test_fused_path_single_partial_fed_shuffle(spark, pages, lex):
     """The 100 TB path: exactly ONE shuffle, and it must carry bucket-level
     partial sums (partial_sum before the Exchange), so shuffle volume is
     O(buckets x measures x partitions), independent of corpus size."""
-    df = finalize_partials(
+    df = rollup(
         score_to_bucket_partials(
             pages, lex, "proportional", "proportional", by="hour",
             validate_langs="skip",
-        )
+        ),
+        "hour",
     )
     p = plan_of(df)
     assert n_shuffles(p) == 1, p
@@ -102,6 +101,72 @@ def test_doc_aggregation_partial_before_shuffle(spark, pages, lex):
     assert "partial_sum" in p, p
 
 
+def _last_exchange_records_written(spark) -> int:
+    """'shuffle records written' summed over the Exchange nodes of the
+    most recent SQL execution, read from the SQL status store (works with
+    the UI disabled)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    store = spark._jsparkSession.sharedState().statusStore()
+    eid = store.executionsList(store.executionsCount() - 1, 1).apply(0).executionId()
+    values = {}
+    it = store.executionMetrics(eid).iterator()
+    while it.hasNext():
+        t = it.next()
+        values[t._1()] = t._2()
+    nodes = store.planGraph(eid).allNodes()
+    total, n_exchanges = 0, 0
+    for i in range(nodes.size()):
+        node = nodes.apply(i)
+        if node.name() != "Exchange":
+            continue
+        n_exchanges += 1
+        metrics = node.metrics()
+        for j in range(metrics.size()):
+            m = metrics.apply(j)
+            if m.name() == "shuffle records written":
+                total += int(values[m.accumulatorId()].replace(",", ""))
+    assert n_exchanges == 1, n_exchanges
+    return total
+
+
+def test_doc_aggregation_skew_ships_partials(spark):
+    """Skew is handled by map-side partial aggregation: with
+    95% of the rows in ONE day bucket, the executed plan's Exchange writes
+    at most one record per (map partition, bucket, lexicon, feature) — the
+    hot bucket never ships its document rows to a single reducer."""
+    from pyspark.sql import functions as F
+
+    n_map, n_docs = 4, 4000
+    hot_day = 1704067200  # 2024-01-01 UTC
+    # one row per (document, lexicon, feature): 4 measures per document
+    doc, measure = F.col("id") % n_docs, F.floor(F.col("id") / n_docs)
+    sent = spark.range(0, 4 * n_docs, numPartitions=n_map).select(
+        F.concat(F.lit("u"), doc.cast("string")).alias("url"),
+        # every 20th document lands on one of 20 other days; the rest on
+        # the hot day
+        F.timestamp_seconds(
+            F.when(doc % 20 == 0, hot_day + 86400 * (1 + doc % 400 / 20)).otherwise(
+                hot_day + doc % 3600
+            )
+        ).alias("warc_ts"),
+        (10 + doc % 50).alias("word_count"),
+        F.when(measure < 2, "L1").otherwise("L2").alias("lexicon"),
+        F.when(measure % 2 == 0, "f1").otherwise("f2").alias("feature"),
+        ((F.hash("id") % 7 - 3) / 3.0).alias("score"),
+    )
+    assert sent.rdd.getNumPartitions() == n_map
+    day = F.date_trunc("day", "warc_ts")
+    hot_share = sent.groupBy(day).count().agg(F.max("count") / F.sum("count")).first()[0]
+    assert hot_share >= 0.9, hot_share
+
+    df = aggregate_docs(sent, by="day", how="proportional", keep_partials=False)
+    df.write.format("noop").mode("overwrite").save()
+    written = _last_exchange_records_written(spark)
+    n_keys = sent.select(day, "lexicon", "feature").distinct().count()
+    assert 0 < written <= n_map * n_keys, (written, n_map, n_keys)
+
+
 def test_scans_prune_unused_columns(spark, pages, lex):
     """Column pruning must reach the parquet scan: documents.parquet has
     an n_chars column no scoring path uses — it must be absent from every
@@ -109,8 +174,8 @@ def test_scans_prune_unused_columns(spark, pages, lex):
     wrong at 100 TB)."""
     for df in (
         compute_sentiment_udf(pages, lex, "counts", mode="unigram", validate_langs="skip"),
-        finalize_partials(score_to_bucket_partials(
-            pages, lex, "counts", "equal_weight", by="day", validate_langs="skip")),
+        rollup(score_to_bucket_partials(
+            pages, lex, "counts", "equal_weight", by="day", validate_langs="skip"), "day"),
     ):
         p = plan_of(df)
         schemas = re.findall(r"ReadSchema: (\S+)", p)

@@ -17,8 +17,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from sentometrics_spark.aggregate.doc_agg import aggregate_docs
+from sentometrics_spark.aggregate.tiers import rollup
 from sentometrics_spark.lexicons import Lexicons
-from sentometrics_spark.scoring.fused import finalize_partials, score_to_bucket_partials
+from sentometrics_spark.scoring.fused import score_to_bucket_partials
 from sentometrics_spark.scoring.udf_engine import (
     compute_sentiment_udf,
     tfidf_corpus_stats,
@@ -43,11 +44,12 @@ def simple_lex():
 def test_empty_doc_inverse_proportional_fused(spark, simple_lex, ignore_zeros):
     # middle document tokenizes to zero tokens: 1/wc must not become inf
     pages = _mini_pages(spark, ["good news today", "!!!", "bad day bad"])
-    fused = finalize_partials(
+    fused = rollup(
         score_to_bucket_partials(
             pages, simple_lex, "proportional", "inverseProportional",
             by="hour", do_ignore_zeros=ignore_zeros,
-        )
+        ),
+        "hour",
     ).toPandas()
     assert np.isfinite(fused["value"]).all()
     sent = compute_sentiment_udf(pages, simple_lex, "proportional", mode="unigram")

@@ -5,7 +5,7 @@
      no-op, and a crash anywhere inside the apply (hour upsert done,
      coarser tiers not) is repaired by re-running the apply without
      double-counting.
-  2. stream_to_hour_tier partials survive a replay without duplication
+  2. streamed hour-tier partials survive a replay without duplication
      (batch_id partition overwrite instead of blind append).
   3. minhash_dedup_candidates caps degenerate LSH buckets: an m-member
      boilerplate bucket emits O(m) star pairs, never O(m²).
@@ -27,6 +27,7 @@ from sentometrics_spark.aggregate.tiers import (
     base_tier,
     build_all_tiers,
     refresh_continuous,
+    rollup,
 )
 from sentometrics_spark.lexicons import Lexicons, fixture_lexicons
 from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
@@ -154,7 +155,7 @@ def test_hour_partials_replay_overwrites_not_appends(spark, tmp_path, split_part
 
     write(pa, 0)
     once = (
-        streaming.finalize_hour_tier(spark, path)
+        rollup(spark.read.parquet(path), "hour")
         .select(*KEY, "value")
         .toPandas()
         .sort_values(KEY)
@@ -162,7 +163,7 @@ def test_hour_partials_replay_overwrites_not_appends(spark, tmp_path, split_part
     )
     write(pa, 0)  # replay
     twice = (
-        streaming.finalize_hour_tier(spark, path)
+        rollup(spark.read.parquet(path), "hour")
         .select(*KEY, "value")
         .toPandas()
         .sort_values(KEY)

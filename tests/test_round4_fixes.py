@@ -150,6 +150,7 @@ def test_compact_partials_spares_pending_newest_batch(spark, tmp_path):
     from datetime import datetime
 
     from sentometrics_spark import streaming
+    from sentometrics_spark.aggregate.tiers import rollup
 
     path = str(tmp_path / "partials")
     cols = "bucket_ts timestamp, lexicon string, feature string, value double, wsum double, wden double, n_docs_in long, n_docs long, batch_id long"
@@ -161,7 +162,7 @@ def test_compact_partials_spares_pending_newest_batch(spark, tmp_path):
     df = spark.createDataFrame(rows(0, 4.0) + rows(1, 6.0) + rows(2, 10.0), cols)
     df.write.partitionBy("batch_id").mode("overwrite").parquet(path)
 
-    before = streaming.finalize_hour_tier(spark, path).collect()[0]
+    before = rollup(spark.read.parquet(path), "hour").collect()[0]
     assert before["wsum"] == 20.0
 
     # compaction runs while batch 2's checkpoint commit is pending
@@ -175,13 +176,13 @@ def test_compact_partials_spares_pending_newest_batch(spark, tmp_path):
         "batch_id"
     ).mode("overwrite").parquet(path)
 
-    after = streaming.finalize_hour_tier(spark, path).collect()[0]
+    after = rollup(spark.read.parquet(path), "hour").collect()[0]
     assert after["wsum"] == 20.0  # no double count
     assert after["value"] == before["value"]
 
     # a second compaction over the now-quiesced table folds everything left
     streaming.compact_partials(spark, path)
-    final = streaming.finalize_hour_tier(spark, path).collect()[0]
+    final = rollup(spark.read.parquet(path), "hour").collect()[0]
     assert final["wsum"] == 20.0
 
 

@@ -1,10 +1,14 @@
-"""Salted two-phase aggregation must equal the plain aggregation exactly."""
+"""Hour-level partial sums must compose into the day aggregation exactly.
+
+Skew is handled by shipping partial sums (wsum, wden) and re-aggregating
+them, so an hour tier rolled up to day must equal a direct day pass."""
 
 import numpy as np
 import pytest
 
-from sentometrics_spark.aggregate.doc_agg import aggregate_docs, aggregate_docs_salted
-from sentometrics_spark.lexicons import Lexicons, fixture_lexicons
+from sentometrics_spark.aggregate.doc_agg import aggregate_docs
+from sentometrics_spark.aggregate.tiers import base_tier, rollup
+from sentometrics_spark.lexicons import Lexicons
 from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
 
 KEY = ["bucket_ts", "lexicon", "feature"]
@@ -15,33 +19,8 @@ def sent(pages, lexicons):
     return compute_sentiment_udf(pages, Lexicons(lex=lexicons.lex), "proportional", mode="unigram").cache()
 
 
-@pytest.mark.parametrize("how", ["equal_weight", "proportional", "exponential"])
-@pytest.mark.parametrize("ignore_zeros", [True, False])
-def test_salted_equals_plain(sent, how, ignore_zeros):
-    plain = (
-        aggregate_docs(sent, by="day", how=how, do_ignore_zeros=ignore_zeros, keep_partials=False)
-        .toPandas()
-        .sort_values(KEY)
-        .reset_index(drop=True)
-    )
-    salted = (
-        aggregate_docs_salted(
-            sent, by="day", how=how, do_ignore_zeros=ignore_zeros, n_salts=16, keep_partials=False
-        )
-        .toPandas()
-        .sort_values(KEY)
-        .reset_index(drop=True)
-    )
-    assert len(plain) == len(salted)
-    np.testing.assert_allclose(
-        plain["value"].to_numpy(), salted["value"].to_numpy(), atol=1e-12, rtol=1e-9
-    )
-
-
 def test_salted_partials_compose(sent):
-    from sentometrics_spark.aggregate.tiers import rollup
-
-    hour = aggregate_docs_salted(sent, by="hour", how="proportional")
+    hour = base_tier(sent, how="proportional", by="hour")
     day = rollup(hour, "day").toPandas().sort_values(KEY).reset_index(drop=True)
     direct = (
         aggregate_docs(sent, by="day", how="proportional", keep_partials=False)
@@ -49,6 +28,7 @@ def test_salted_partials_compose(sent):
         .sort_values(KEY)
         .reset_index(drop=True)
     )
+    assert len(day) == len(direct)
     np.testing.assert_allclose(
         day["value"].to_numpy(), direct["value"].to_numpy(), atol=1e-12, rtol=1e-9
     )

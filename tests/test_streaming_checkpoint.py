@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from sentometrics_spark.aggregate.tiers import base_tier
+from sentometrics_spark.aggregate.tiers import base_tier, rollup
 from sentometrics_spark.lexicons import Lexicons, fixture_lexicons
 from sentometrics_spark.scoring.udf_engine import compute_sentiment_udf
 from sentometrics_spark.storage.checkpoint import CheckpointedRun, partition_key_col
@@ -31,16 +31,20 @@ def test_stream_equals_batch(spark, pages, tmp_path):
         .option("maxFilesPerTrigger", 2)
         .load(src)
     )
-    q = streaming.stream_to_hour_tier(
+    q = streaming.stream_events_tier(
         stream,
-        lex,
+        lambda df: base_tier(
+            compute_sentiment_udf(df, lex, "proportional", mode="unigram"),
+            "proportional",
+            by="hour",
+        ),
         partials_path=str(tmp_path / "partials"),
         checkpoint_path=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
 
     got = (
-        streaming.finalize_hour_tier(spark, str(tmp_path / "partials"))
+        rollup(spark.read.parquet(str(tmp_path / "partials")), "hour")
         .select(*KEY, "value")
         .toPandas()
         .sort_values(KEY)
@@ -60,7 +64,7 @@ def test_stream_equals_batch(spark, pages, tmp_path):
     # compaction preserves the finalized tier
     streaming.compact_partials(spark, str(tmp_path / "partials"))
     got2 = (
-        streaming.finalize_hour_tier(spark, str(tmp_path / "partials"))
+        rollup(spark.read.parquet(str(tmp_path / "partials")), "hour")
         .select(*KEY, "value")
         .toPandas()
         .sort_values(KEY)

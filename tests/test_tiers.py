@@ -24,11 +24,15 @@ def sent(pages, lexicons):
     return compute_sentiment_udf(pages, Lexicons(lex=lexicons.lex), "proportional", mode="unigram").cache()
 
 
-@pytest.mark.parametrize("how", ["equal_weight", "proportional", "inverseProportional"])
+@pytest.mark.parametrize(
+    "how",
+    ["equal_weight", "proportional", "inverseProportional", "exponential", "inverseExponential"],
+)
 @pytest.mark.parametrize("tier", ["day", "week", "month"])
 def test_tier_composability(sent, how, tier):
     """Rolling up the hour tier must equal aggregating documents directly at
-    the coarser tier (the partial-sum exactness contract)."""
+    the coarser tier (the partial-sum exactness contract), for all five doc
+    weighting schemes."""
     hour = base_tier(sent, how=how, by="hour")
     composed = rollup(hour, tier).select(*KEY, "value").toPandas().sort_values(KEY)
     direct = (
@@ -56,11 +60,6 @@ def test_chained_tiers(sent):
     np.testing.assert_allclose(got["value"].to_numpy(), exp["value"].to_numpy(), atol=1e-12, rtol=1e-9)
 
 
-def test_bucket_relative_scheme_rejected(sent):
-    with pytest.raises(ValueError, match="not tier-composable"):
-        base_tier(sent, how="exponential")
-
-
 def test_tier_store_roundtrip_and_retention(spark, sent, tmp_path):
     store = TierStore(spark, str(tmp_path / "tiers"))
     hour = base_tier(sent, how="proportional", by="hour")
@@ -83,20 +82,19 @@ def test_tier_store_roundtrip_and_retention(spark, sent, tmp_path):
 @pytest.mark.parametrize("ignore_zeros", [True, False])
 def test_exponential_tier_composability(sent, tier, ignore_zeros):
     """The bucket-relative exponential scheme composes exactly from the
-    affine partials (s_sum, wcs_sum, wc_in, n_in, bucket_wc)."""
-    from sentometrics_spark.aggregate.tiers import base_tier_exponential, rollup_exponential
-
-    hour = base_tier_exponential(sent, by="hour", alpha=0.1, do_ignore_zeros=ignore_zeros)
+    affine partials (s_sum, wcs_sum, wc_in, n_in, bucket_wc) along the
+    build_all_tiers chain, with and without do_ignore_zeros."""
+    hour = base_tier(sent, "exponential", do_ignore_zeros=ignore_zeros, by="hour")
+    assert "bucket_wc" in hour.columns
     lower = hour
     for t in ["day", "week", "month"]:
         if t == "week" and tier == "month":
             continue  # week does not nest in month: chain hour->day->month
-        lower = rollup_exponential(lower, t, alpha=0.1)
+        lower = rollup(lower, t)
         if t == tier:
             break
     direct = aggregate_docs(
-        sent, by=tier, how="exponential", do_ignore_zeros=ignore_zeros,
-        alpha=0.1, keep_partials=False,
+        sent, by=tier, how="exponential", do_ignore_zeros=ignore_zeros, keep_partials=False,
     )
     got = lower.select(*KEY, "value").toPandas().sort_values(KEY).reset_index(drop=True)
     exp = direct.select(*KEY, "value").toPandas().sort_values(KEY).reset_index(drop=True)
@@ -121,8 +119,6 @@ def test_exponential_tier_zero_wordcount_bucket(spark):
     with bucket_wc=0 produced Inf*0 = NaN through try_divide/coalesce)."""
     import datetime as dt
 
-    from sentometrics_spark.aggregate.tiers import base_tier_exponential, rollup_exponential
-
     rows = [
         # bucket 1: normal docs
         ("u1", dt.datetime(2024, 1, 1, 9), "en", 10, "L", "f", 0.4),
@@ -136,11 +132,11 @@ def test_exponential_tier_zero_wordcount_bucket(spark):
         "url string, warc_ts timestamp, lang string, word_count long, "
         "lexicon string, feature string, score double",
     )
-    hour = base_tier_exponential(sent, by="hour", alpha=0.1)
+    hour = base_tier(sent, "exponential", by="hour")
     pdf = hour.toPandas().set_index("bucket_ts").sort_index()
     assert np.isfinite(pdf["value"]).all(), pdf
     assert pdf.loc[dt.datetime(2024, 1, 1, 10), "value"] == 0.0
-    day = rollup_exponential(hour, "day", alpha=0.1).toPandas()
+    day = rollup(hour, "day").toPandas()
     assert np.isfinite(day["value"]).all(), day
 
 
@@ -192,27 +188,15 @@ def test_refresh_continuous_exponential(spark, sent, tmp_path):
     """The affine-partial exponential tiers refresh incrementally too:
     two-batch refresh equals the direct exponential aggregation at every
     tier (bucket_wc partials sum because batches hold disjoint docs)."""
-    from sentometrics_spark.aggregate.tiers import (
-        base_tier_exponential,
-        refresh_continuous,
-        rollup_exponential,
-    )
+    from sentometrics_spark.aggregate.tiers import refresh_continuous
 
     store = TierStore(spark, str(tmp_path / "cont_exp"))
     b1 = sent.filter(F.crc32(F.col("url")) % 2 == 0)
     b2 = sent.filter(F.crc32(F.col("url")) % 2 == 1)
-    refresh_continuous(store, base_tier_exponential(b1, by="hour", alpha=0.2),
-                       exponential=True, alpha=0.2)
-    refresh_continuous(store, base_tier_exponential(b2, by="hour", alpha=0.2),
-                       exponential=True, alpha=0.2)
+    refresh_continuous(store, base_tier(b1, "exponential", by="hour"))
+    refresh_continuous(store, base_tier(b2, "exponential", by="hour"))
 
-    hour_full = base_tier_exponential(sent, by="hour", alpha=0.2)
-    want = {
-        "hour": hour_full,
-        "day": rollup_exponential(hour_full, "day", alpha=0.2),
-        "week": rollup_exponential(rollup_exponential(hour_full, "day", alpha=0.2), "week", alpha=0.2),
-        "month": rollup_exponential(rollup_exponential(hour_full, "day", alpha=0.2), "month", alpha=0.2),
-    }
+    want = build_all_tiers(sent, "exponential")
     for tier in ("hour", "day", "week", "month"):
         got = _tier_pdf(store.read(tier))
         w = _tier_pdf(want[tier])
@@ -220,3 +204,38 @@ def test_refresh_continuous_exponential(spark, sent, tmp_path):
         np.testing.assert_allclose(
             got["value"].to_numpy(), w["value"].to_numpy(), rtol=1e-9, atol=1e-12
         )
+
+
+def test_submit_job_exponential_tiers(spark, sf_dir, tmp_path):
+    """scripts/submit_job.py with a bucket-relative doc weighting stores
+    tiers built from the affine partials: the stored day tier equals
+    direct exponential aggregation by day (regression: the hour tier was
+    rolled up as if (wsum, wden) composed, off by up to 0.43)."""
+    import os
+    import subprocess
+    import sys
+
+    from sentometrics_spark.corpus import build_pages, validate_corpus
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    src, out = str(tmp_path / "pages"), str(tmp_path / "tiers")
+    build_pages(spark, sf_dir, with_html=False).write.parquet(src)
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")])))
+    proc = subprocess.run(
+        [
+            sys.executable, os.path.join(repo, "scripts", "submit_job.py"),
+            "--input", src, "--output", out,
+            "--how-docs", "exponential", "--master", "local[2]",
+        ],
+        env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+
+    pages = validate_corpus(spark.read.parquet(src))
+    sent = compute_sentiment_udf(pages, fixture_lexicons(), "proportional", mode="unigram")
+    direct = aggregate_docs(sent, by="day", how="exponential", keep_partials=False)
+    got = _tier_pdf(TierStore(spark, out).read("day"))
+    want = _tier_pdf(direct)
+    assert len(got) == len(want)
+    assert (got[KEY] == want[KEY]).all().all()
+    np.testing.assert_allclose(got["value"].to_numpy(), want["value"].to_numpy(), rtol=1e-9, atol=1e-12)

@@ -2,35 +2,29 @@
 with retention (north rule; no reference equivalent — the reference
 aggregates once per requested ``by``).
 
-Exactness contract: the document-aggregation value is a weighted mean
-value = sum(num_d * s_d) / sum(num_d). Every tier row carries partial sums
-that merge by plain addition across buckets, so a coarser tier is a pure
-re-aggregation of a finer one and equals direct aggregation at the coarser
-bucket (bit-for-bit up to float associativity). Which partials a tier
-keeps depends on the weighting scheme:
+Exactness contract: every tier row carries the partial sums of
+``doc_agg.aggregate_docs`` (see its module docstring), which merge by plain
+addition across buckets, so a coarser tier is a pure re-aggregation of a
+finer one and equals direct aggregation at the coarser bucket (bit-for-bit
+up to float associativity):
 
   - doc-LOCAL schemes (equal_weight, proportional, inverseProportional):
-    num_d depends only on the document, so the pair (wsum, wden) composes:
 
         day.wsum = sum(hour.wsum),  day.wden = sum(hour.wden)
         day.value = day.wsum / day.wden
 
-  - bucket-RELATIVE schemes (exponential, inverseExponential): num_d =
-    c*(wc_d/W - 1) depends on the bucket's total word count W, so
-    (wsum, wden) does not compose. num_d is AFFINE in wc_d, though:
-    retaining per (bucket, lexicon, feature) the sums (s_sum = sum s_d,
-    wcs_sum = sum wc_d*s_d, wc_in = sum wc_d, n_in) over the non-null set,
-    plus W itself (bucket_wc), any coarser bucket with W' = sum W
-    recombines exactly:
+  - bucket-RELATIVE schemes (exponential, inverseExponential): the weight
+    numerator wc_d - W depends on the bucket's total word count W, so the
+    tier keeps (s_sum, wcs_sum, wc_in, n_docs_in) and W itself
+    (bucket_wc); all five sum, including W' = sum W, and
 
-        sum num*s = (c/W')*wcs_sum - c*s_sum
-        sum num   = (c/W')*wc_in   - c*n_in
+        day.value = (wcs_sum - W'*s_sum) / (wc_in - W'*n_docs_in)
 
-    c = 10*alpha cancels in the ratio (as does inverseExponential's sign
-    flip), so the value is computed with c = 1.
+    with an exact integer-valued denominator.
 
-``base_tier`` picks the partial set from the scheme and ``rollup`` picks it
-from the input's columns (``bucket_wc`` present = affine partials), so
+``base_tier`` is ``aggregate_docs`` with its partials, and ``rollup`` picks
+the partial set from the input's columns (``bucket_wc`` present =
+bucket-relative) and finalizes with the same value expression, so
 ``build_all_tiers`` and ``refresh_continuous`` serve all five schemes.
 
 Tier storage layout (TierStore): one partitioned parquet/Iceberg table per
@@ -42,50 +36,17 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sentometrics_spark.aggregate.doc_agg import (
     MEASURE_KEYS,
-    _ignore_zeros,
     aggregate_docs,
-    bucket_col,
-    bucket_word_count,
+    finalize,
+    partial_cols,
 )
 
 TIER_ORDER = ["hour", "day", "week", "month"]
-
-PARTIAL_COLS = ["wsum", "wden", "n_docs_in", "n_docs"]
-
-EXP_PARTIAL_COLS = ["s_sum", "wcs_sum", "wc_in", "n_docs_in", "n_docs", "bucket_wc"]
-
-
-def partial_cols(tier: DataFrame) -> list[str]:
-    """The partial sums a tier carries: the affine exponential set when it
-    has ``bucket_wc``, the (wsum, wden) set otherwise."""
-    return EXP_PARTIAL_COLS if "bucket_wc" in tier.columns else PARTIAL_COLS
-
-
-def _value(pcols: list[str]) -> Column:
-    """The finalized weighted mean of a partial set; an empty non-null set
-    gives 0.0 (the reference's sum(na.rm=TRUE)-over-empty edge)."""
-    if "bucket_wc" not in pcols:
-        return F.coalesce(F.try_divide(F.col("wsum"), F.col("wden")), F.lit(0.0))
-    # ((1/W)*wcs_sum - s_sum) / ((1/W)*wc_in - n_in). Guard W = 0 (a
-    # bucket whose docs all tokenized to zero words): 1/0 = Inf and
-    # Inf*0 = NaN would pass try_divide/coalesce — such a bucket has no
-    # weighable docs, so value = 0.0
-    w = F.col("bucket_wc")
-    inv_w = F.when(w > 0, F.lit(1.0) / w)
-    num = inv_w * F.col("wcs_sum") - F.col("s_sum")
-    den = inv_w * F.col("wc_in") - F.col("n_docs_in")
-    return F.coalesce(F.try_divide(num, den), F.lit(0.0))
-
-
-def _finalize(agg: DataFrame, pcols: list[str]) -> DataFrame:
-    return agg.withColumn("value", _value(pcols)).select(
-        "bucket_ts", *MEASURE_KEYS, "value", *pcols
-    )
 
 
 def base_tier(
@@ -96,27 +57,9 @@ def base_tier(
 ) -> DataFrame:
     """Finest tier straight from doc-level sentiment, carrying the partials
     that make coarser tiers exact (see module docstring)."""
-    if how not in ("exponential", "inverseExponential"):
-        return aggregate_docs(
-            sentiment, by=by, how=how, do_ignore_zeros=do_ignore_zeros, keep_partials=True
-        )
-    s = sentiment.withColumn("bucket_ts", bucket_col(F.col("warc_ts"), by))
-    score = _ignore_zeros(F.col("score")) if do_ignore_zeros else F.col("score")
-    wc = F.col("word_count").cast("double")
-    agg = (
-        s.withColumn("__s", score)
-        .groupBy("bucket_ts", *MEASURE_KEYS)
-        .agg(
-            F.sum("__s").alias("s_sum"),
-            F.sum(wc * F.col("__s")).alias("wcs_sum"),
-            F.sum(F.when(F.col("__s").isNotNull(), wc)).alias("wc_in"),
-            F.count(F.when(F.col("__s").isNotNull(), 1)).alias("n_docs_in"),
-            F.count("*").alias("n_docs"),
-        )
-        .join(bucket_word_count(s, "bucket_wc"), "bucket_ts")
-        .na.fill(0.0, ["s_sum", "wcs_sum", "wc_in"])
+    return aggregate_docs(
+        sentiment, by=by, how=how, do_ignore_zeros=do_ignore_zeros, keep_partials=True
     )
-    return _finalize(agg, EXP_PARTIAL_COLS)
 
 
 def rollup(lower_tier: DataFrame, to: str) -> DataFrame:
@@ -128,7 +71,7 @@ def rollup(lower_tier: DataFrame, to: str) -> DataFrame:
     agg = lower_tier.groupBy(
         F.date_trunc(to, F.col("bucket_ts")).alias("bucket_ts"), *MEASURE_KEYS
     ).agg(*[F.sum(c).alias(c) for c in pcols])
-    return _finalize(agg, pcols)
+    return finalize(agg, pcols)
 
 
 def build_all_tiers(

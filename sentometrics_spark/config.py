@@ -96,7 +96,6 @@ class AggSpec:
     lag: int = 1
     fill: str = "zero"
     do_ignore_zeros: bool = True
-    alpha_exp_docs: float = 0.1
     do_sentence: bool = False
 
     def __post_init__(self) -> None:
@@ -110,8 +109,6 @@ class AggSpec:
             raise ValueError(f"unknown fill: {self.fill}")
         if self.lag < 1:
             raise ValueError("lag must be >= 1")
-        if not (0 < self.alpha_exp_docs < 1):
-            raise ValueError("alphaExpDocs must be in (0, 1)")
 
 
 def get_hows() -> dict[str, list[str]]:

@@ -119,7 +119,6 @@ def attributions_docs(
     by: str,
     how: str = "equal_weight",
     do_ignore_zeros: bool = True,
-    alpha: float = 0.1,
     common_spine: bool = True,
 ) -> DataFrame:
     """Per-document attribution (attributions_docs,
@@ -140,8 +139,8 @@ def attributions_docs(
     weights: a stored attribWeights$W table (reference parity — joined to
     the sentiment on (url, bucket_ts, measure keys), a doc-sized
     SortMergeJoin), or None to derive the realized weights INLINE from
-    the sentiment itself via the doc_weights window (``how`` /
-    ``do_ignore_zeros`` / ``alpha`` as in
+    the sentiment itself via the doc_weights window (``how`` and
+    ``do_ignore_zeros`` as in
     :func:`~sentometrics_spark.aggregate.doc_agg.doc_weights`). The
     inline form is the scale path when W is not pre-materialized: the
     weights derive from the sentiment rows themselves (panel-sized
@@ -192,7 +191,7 @@ def attributions_docs(
     if weights is None:
         from sentometrics_spark.aggregate.doc_agg import with_doc_weights
 
-        sw = with_doc_weights(s, how, do_ignore_zeros, alpha)
+        sw = with_doc_weights(s, how, do_ignore_zeros)
     else:
         # doc-sized x doc-sized equi-join; sort-merge is deliberate — a
         # shuffled-hash build of the weights side was A/B-measured SLOWER

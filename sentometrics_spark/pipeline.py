@@ -79,19 +79,15 @@ class SentoMeasures:
         }
 
 
-def sento_measures(
-    pages: DataFrame,
-    lexicons: Lexicons,
-    spec: AggSpec,
-    mode: str | None = None,
+def _measures(
+    sentiment: DataFrame, kernels: dict[str, np.ndarray], spec: AggSpec
 ) -> SentoMeasures:
-    sentiment = compute_sentiment(pages, lexicons, spec.how_within, mode=mode)
+    """The shared tail: aggregate_docs -> measures_fill -> aggregate_time."""
     measures_doc = aggregate_docs(
         sentiment,
         by=spec.by,
         how=spec.how_docs,
         do_ignore_zeros=spec.do_ignore_zeros,
-        alpha=spec.alpha_exp_docs,
         keep_partials=False,
     )
     # the bucketed panel is tiny (#buckets x #measures); persist it so the
@@ -99,6 +95,19 @@ def sento_measures(
     # rolling window do not re-execute the full corpus-scoring DAG
     measures_doc = measures_doc.persist()
     filled = measures_fill(measures_doc, by=spec.by, fill=spec.fill)
+    measures = aggregate_time(
+        filled.select("bucket_ts", "lexicon", "feature", "value"), kernels, spec.lag
+    )
+    return SentoMeasures(measures=measures, sentiment=sentiment, kernels=kernels, spec=spec)
+
+
+def sento_measures(
+    pages: DataFrame,
+    lexicons: Lexicons,
+    spec: AggSpec,
+    mode: str | None = None,
+) -> SentoMeasures:
+    sentiment = compute_sentiment(pages, lexicons, spec.how_within, mode=mode)
     if spec.lag == 1:
         # lag = 1 means no time aggregation: the reference replaces the
         # requested schemes with one 'dummyTime' identity kernel
@@ -106,10 +115,7 @@ def sento_measures(
         kernels = {"dummyTime": np.ones(1)}
     else:
         kernels = setup_time_weights(spec.time_kernels, spec.lag)
-    measures = aggregate_time(
-        filled.select("bucket_ts", "lexicon", "feature", "value"), kernels, spec.lag
-    )
-    return SentoMeasures(measures=measures, sentiment=sentiment, kernels=kernels, spec=spec)
+    return _measures(sentiment, kernels, spec)
 
 
 def measures_update(
@@ -127,20 +133,4 @@ def measures_update(
     existing_ids = sm.sentiment.select("url").distinct()
     new_pages = pages_incoming.join(existing_ids, "url", "left_anti")
     new_sent = compute_sentiment(new_pages, lexicons, sm.spec.how_within, mode=mode)
-    merged = sm.sentiment.unionByName(new_sent)
-
-    from sentometrics_spark.aggregate.doc_agg import aggregate_docs
-
-    measures_doc = aggregate_docs(
-        merged,
-        by=sm.spec.by,
-        how=sm.spec.how_docs,
-        do_ignore_zeros=sm.spec.do_ignore_zeros,
-        alpha=sm.spec.alpha_exp_docs,
-        keep_partials=False,
-    ).persist()
-    filled = measures_fill(measures_doc, by=sm.spec.by, fill=sm.spec.fill)
-    measures = aggregate_time(
-        filled.select("bucket_ts", "lexicon", "feature", "value"), sm.kernels, sm.spec.lag
-    )
-    return SentoMeasures(measures=measures, sentiment=merged, kernels=sm.kernels, spec=sm.spec)
+    return _measures(sm.sentiment.unionByName(new_sent), sm.kernels, sm.spec)

@@ -10,7 +10,9 @@ batch itself: each batch reduces directly to
 (bucket_ts, lexicon, feature, wsum, wden, n_docs_in, n_docs) partial rows —
 O(buckets-touched x measures) per batch instead of O(docs x measures).
 The downstream ``tiers.rollup`` then merges partials (associative), exactly
-like the tier rollups and the streaming ingest.
+like the tier rollups and the streaming ingest. Scoring itself is the UDF
+engine's front-end (``udf_engine.language_scorer``: same guards, same
+broadcast, same TFIDF corpus stats), so only the bucket reduction is here.
 
 Only the doc-LOCAL across-document weighting schemes are fusable
 (equal_weight / proportional / inverseProportional): the (wsum, wden)
@@ -29,9 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from sentometrics_spark.aggregate.doc_agg import ZERO_EPS
-from sentometrics_spark.corpus import check_language_coverage, feature_columns
 from sentometrics_spark.lexicons import Lexicons
-from sentometrics_spark.scoring.udf_engine import flat_from_texts, score_flat
+from sentometrics_spark.scoring.udf_engine import language_scorer
 
 FUSABLE_DOC_HOWS = ("equal_weight", "proportional", "inverseProportional")
 
@@ -62,16 +63,12 @@ def score_to_bucket_partials(
         )
     if by not in _TRUNC:
         raise ValueError(f"fused path supports hour/day buckets, got: {by}")
-    spark = pages.sparkSession
-    check_language_coverage(pages, set(lexicons.lex), validate_langs)
-
-    feats = feature_columns(pages)
+    feats, lex_names, score_batch = language_scorer(
+        pages, lexicons, how_within, mode, validate_langs=validate_langs
+    )
     n_feat = len(feats)
-    lex_names = lexicons.lexicon_names()
     n_lex = len(lex_names)
     k = n_lex * n_feat
-    packs = {lang: lexicons.pack(lang) for lang in lexicons.languages}
-    bc = spark.sparkContext.broadcast(packs)
     trunc = _TRUNC[by]
 
     # measure-name columns, laid out lexicon-major like the score block
@@ -79,19 +76,11 @@ def score_to_bucket_partials(
     feat_col = np.tile(np.array(feats, dtype=object), n_lex)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        packs_b = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             parts = []
-            for lang, grp in pdf.groupby("lang", sort=False):
-                pack = packs_b[lang]
-                flat = flat_from_texts(grp["text"], pack)
-                lens = flat[1]
-                scores = score_flat(flat, pack, how_within, mode)  # [n, nL]
-                fvals = grp[feats].to_numpy(dtype=np.float64)
-                s_lf = (scores[:, :, None] * fvals[:, None, :]).reshape(len(grp), k)
-
+            for _lang, grp, lens, s_lf in score_batch(pdf):
                 buckets = grp["warc_ts"].to_numpy().astype(trunc)
                 ub, b_idx = np.unique(buckets, return_inverse=True)
                 n_b = len(ub)

@@ -468,26 +468,26 @@ def tfidf_corpus_stats(
     return out
 
 
-def compute_sentiment_udf(
+def language_scorer(
     pages: DataFrame,
     lexicons: Lexicons,
-    how: str = "proportional",
+    how: str,
     mode: str | None = None,
     tokens_col: str | None = None,
     validate_langs: str = "fail",
-) -> DataFrame:
-    """C9: one mapInPandas pass -> long sentiment table.
+):
+    """The scoring front-end of every Arrow scoring pass: resolves
+    ``mode``, runs the driver-side guards, broadcasts the lexicon packs
+    (and the TFIDF corpus stats), and returns ``(feats, lex_names,
+    score_batch)``. ``score_batch(pdf)`` runs on the executor and yields,
+    per language group of one Arrow batch, ``(lang, grp, word_count [n],
+    score_lf [n, K])`` with the (lexicon x feature) score block laid out
+    lexicon-major, K = len(lex_names) * len(feats).
 
     mode: None => auto (unigram if no valence; bigram if valence 'y';
     cluster if valence 't' — compute_sentiment docs,
     /root/reference/R/sentiment_engines.R:36-51). Explicit 'unigram' ignores
-    valence.
-
-    tokens_col: T3 caller-supplied tokenization override — the name of an
-    array<string> column of pre-tokenized unigrams that replaces the
-    internal tokenizer (tokens= passthrough,
-    /root/reference/R/sentiment_engines.R:11-12,234-240)."""
-    spark = pages.sparkSession
+    valence."""
     if mode is None:
         if not lexicons.valence:
             mode = "unigram"
@@ -509,24 +509,61 @@ def compute_sentiment_udf(
     check_language_coverage(pages, set(lexicons.lex), validate_langs)
 
     feats = feature_columns(pages)
-    packs = {lang: lexicons.pack(lang) for lang in lexicons.languages}
-    tfidf_stats = (
-        tfidf_corpus_stats(pages, lexicons, tokens_col) if how == "TFIDF" else None
-    )
-    bc = spark.sparkContext.broadcast((packs, tfidf_stats))
-
-    text_in = tokens_col if tokens_col is not None else "text"
-    in_cols = ["url", "warc_ts", "lang", text_in, *feats]
-    n_feat = len(feats)
-
     # all languages must share the lexicon-name set so the wide score block
     # has a fixed layout (true by sento_lexicons construction per language)
     lex_names = lexicons.lexicon_names()
     for lang in lexicons.languages:
         if sorted(lexicons.lex[lang]) != lex_names:
             raise ValueError("lexicon names must be identical across languages")
-    n_lex = len(lex_names)
-    k = n_lex * n_feat
+    k = len(lex_names) * len(feats)
+
+    packs = {lang: lexicons.pack(lang) for lang in lexicons.languages}
+    tfidf_stats = (
+        tfidf_corpus_stats(pages, lexicons, tokens_col) if how == "TFIDF" else None
+    )
+    bc = pages.sparkSession.sparkContext.broadcast((packs, tfidf_stats))
+
+    def score_batch(pdf: pd.DataFrame):
+        packs_b, tfidf_b = bc.value
+        for lang, grp in pdf.groupby("lang", sort=False):
+            pack = packs_b.get(lang)
+            if pack is None:
+                raise ValueError(f"no lexicon for language: {lang}")
+            if tokens_col is not None:
+                flat = flat_from_tokens([list(t) for t in grp[tokens_col]], pack)
+            else:
+                flat = flat_from_texts(grp["text"], pack)
+            tf = tfidf_b.get(lang) if tfidf_b else None
+            scores = score_flat(flat, pack, how, mode, tf)
+            fvals = grp[feats].to_numpy(dtype=np.float64)  # [n, F]
+            score_lf = (scores[:, :, None] * fvals[:, None, :]).reshape(len(grp), k)
+            yield lang, grp, flat[1], score_lf
+
+    return feats, lex_names, score_batch
+
+
+def compute_sentiment_udf(
+    pages: DataFrame,
+    lexicons: Lexicons,
+    how: str = "proportional",
+    mode: str | None = None,
+    tokens_col: str | None = None,
+    validate_langs: str = "fail",
+) -> DataFrame:
+    """C9: one mapInPandas pass -> long sentiment table.
+
+    mode: see :func:`language_scorer`.
+
+    tokens_col: T3 caller-supplied tokenization override — the name of an
+    array<string> column of pre-tokenized unigrams that replaces the
+    internal tokenizer (tokens= passthrough,
+    /root/reference/R/sentiment_engines.R:11-12,234-240)."""
+    feats, lex_names, score_batch = language_scorer(
+        pages, lexicons, how, mode, tokens_col, validate_langs
+    )
+    text_in = tokens_col if tokens_col is not None else "text"
+    in_cols = ["url", "warc_ts", "lang", text_in, *feats]
+    k = len(lex_names) * len(feats)
 
     # The UDF emits the (lexicon x feature) score block as K plain double
     # columns — no row expansion or repeated strings cross the Arrow
@@ -538,24 +575,11 @@ def compute_sentiment_udf(
     )
 
     def score_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        packs_b, tfidf_b = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             out_parts = []
-            for lang, grp in pdf.groupby("lang", sort=False):
-                pack = packs_b.get(lang)
-                if pack is None:
-                    raise ValueError(f"no lexicon for language: {lang}")
-                if tokens_col is not None:
-                    flat = flat_from_tokens([list(t) for t in grp[tokens_col]], pack)
-                else:
-                    flat = flat_from_texts(grp["text"], pack)
-                tf = tfidf_b.get(lang) if tfidf_b else None
-                lens = flat[1]
-                scores = score_flat(flat, pack, how, mode, tf)
-                fvals = grp[feats].to_numpy(dtype=np.float64)  # [n, F]
-                score_lf = (scores[:, :, None] * fvals[:, None, :]).reshape(len(grp), k)
+            for lang, grp, lens, score_lf in score_batch(pdf):
                 cols = {
                     "url": grp["url"].to_numpy(),
                     "warc_ts": grp["warc_ts"].to_numpy(),

@@ -343,9 +343,12 @@ def stream_events_tier(
 
     Partials are partitioned by batch_id with dynamic overwrite, so an
     at-least-once foreachBatch replay rewrites its OWN partition instead of
-    appending duplicates. Finalization (below) merges partials per bucket — late
-    events land in whatever bucket their timestamp belongs to and simply
-    contribute another mergeable partial; no watermark, nothing dropped.
+    appending duplicates. Finalization merges partials per bucket
+    (finalize_histogram_tier below; for sketch tiers the stream-grain
+    timeseries rollup, e.g. ``hll_distinct_rollup(spark.read.parquet(path),
+    to="day")``) — late events land in whatever bucket their timestamp
+    belongs to and simply contribute another mergeable partial; no
+    watermark, nothing dropped.
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -384,51 +387,4 @@ def finalize_histogram_tier(
             F.first("bin_lo").alias("bin_lo"),
             F.first("bin_hi").alias("bin_hi"),
         )
-    )
-
-
-def finalize_hll_tier(
-    spark: SparkSession, partials_path: str, series_keys: list[str] | None = None
-) -> DataFrame:
-    """Merge streamed HLL distinct-count partials: register-max union,
-    associative — the merged registers equal the batch sketch's exactly;
-    the reported estimate is within the standard bound (HIP vs composite
-    estimator choice, same caveat as hll_distinct_rollup)."""
-    keys = list(series_keys or [])
-    p = spark.read.parquet(partials_path)
-    return (
-        p.groupBy(*keys, "bucket_ts")
-        .agg(
-            F.hll_union_agg(F.col("hll")).alias("hll"),
-            F.sum("n_rows").alias("n_rows"),
-        )
-        .withColumn("estimate", F.hll_sketch_estimate(F.col("hll")))
-    )
-
-
-def finalize_kll_tier(
-    spark: SparkSession,
-    partials_path: str,
-    series_keys: list[str] | None = None,
-    qs: list[float] = (0.5, 0.95, 0.99),
-) -> DataFrame:
-    """Merge streamed KLL percentile partials: sketch merge, rank-error
-    bound preserved; n_rows exactly additive (tested stream==batch)."""
-    keys = list(series_keys or [])
-    p = spark.read.parquet(partials_path)
-    agg = p.groupBy(*keys, "bucket_ts").agg(
-        F.kll_merge_agg_double(F.col("kll")).alias("kll"),
-        F.sum("n_rows").alias("n_rows"),
-    )
-    return agg.select(
-        *keys,
-        "bucket_ts",
-        "kll",
-        *[
-            F.kll_sketch_get_quantile_double(F.col("kll"), F.lit(float(q))).alias(
-                f"p{str(q).replace('0.', '').ljust(2, '0')}"
-            )
-            for q in qs
-        ],
-        "n_rows",
     )

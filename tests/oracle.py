@@ -299,8 +299,6 @@ def oracle_aggregate_time(
 
 def oracle_measures(pages, lexicons, spec, kernels, mode="unigram"):
     sent = oracle_sentiment(pages, lexicons, spec.how_within, mode)
-    m = oracle_aggregate_docs(
-        sent, spec.by, spec.how_docs, spec.do_ignore_zeros, spec.alpha_exp_docs
-    )
+    m = oracle_aggregate_docs(sent, spec.by, spec.how_docs, spec.do_ignore_zeros)
     m = oracle_fill(m, spec.by, spec.fill)
     return oracle_aggregate_time(m, kernels, spec.lag)

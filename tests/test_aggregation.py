@@ -7,6 +7,7 @@ import pytest
 
 from sentometrics_spark.aggregate.doc_agg import aggregate_docs
 from sentometrics_spark.aggregate.kernels import setup_time_weights
+from sentometrics_spark.aggregate.tiers import build_all_tiers
 from sentometrics_spark.aggregate.time_agg import aggregate_time, measures_fill
 from sentometrics_spark.config import AggSpec, TimeKernelSpec
 from sentometrics_spark.lexicons import Lexicons
@@ -58,6 +59,17 @@ def test_aggregate_docs_vs_oracle(sent, sent_pdf, how, ignore_zeros, by):
 def test_aggregate_docs_other_buckets(sent, sent_pdf, by):
     got = aggregate_docs(sent, by=by, how="proportional", keep_partials=False)
     exp = orc.oracle_aggregate_docs(sent_pdf, by, "proportional", True)
+    _cmp_measures(got.select(*MKEY, "value"), exp)
+
+
+@pytest.mark.parametrize("how", ["exponential", "inverseExponential"])
+def test_exponential_hour_tier_vs_oracle(sent, sent_pdf, how):
+    """The stored hour tier of the bucket-relative schemes equals the
+    oracle, one-document buckets included (regression: the 1/W form of
+    the tier value cancelled to noise instead of the exact zero weight
+    denominator, off by up to 0.25 where the oracle gives 0.0)."""
+    got = build_all_tiers(sent, how)["hour"]
+    exp = orc.oracle_aggregate_docs(sent_pdf, "hour", how)
     _cmp_measures(got.select(*MKEY, "value"), exp)
 
 

@@ -47,5 +47,6 @@ def test_kernel_spec_param_domains():
         TimeKernelSpec("own", own=(("dot--hacker", (0.5, 0.5)),))
     # valid params still construct
     TimeKernelSpec("own", own=(("flat", (0.5, 0.5)),))
-    with pytest.raises(ValueError, match="alphaExpDocs"):
-        AggSpec(how_docs="exponential", alpha_exp_docs=1.5)
+    # alphaExpDocs cancels from the normalized doc weights: not a field
+    with pytest.raises(TypeError, match="alpha_exp_docs"):
+        AggSpec(how_docs="exponential", alpha_exp_docs=0.1)

@@ -333,7 +333,9 @@ def test_stream_events_tiers_equal_batch(spark, sf_dir, tmp_path):
     no raw-event reprocessing at finalize time."""
     from sentometrics_spark.aggregate.timeseries import (
         bucket_histogram,
+        hll_distinct_rollup,
         hll_distinct_tier,
+        kll_quantile_rollup,
         kll_quantile_tier,
     )
 
@@ -377,7 +379,7 @@ def test_stream_events_tiers_equal_batch(spark, sf_dir, tmp_path):
     )
     q.awaitTermination(120)
     hll = (
-        streaming.finalize_hll_tier(spark, str(tmp_path / "hll_partials"))
+        hll_distinct_rollup(spark.read.parquet(str(tmp_path / "hll_partials")), to="day")
         .toPandas().set_index("bucket_ts").sort_index()
     )
     exact = (
@@ -398,7 +400,7 @@ def test_stream_events_tiers_equal_batch(spark, sf_dir, tmp_path):
     )
     q.awaitTermination(120)
     kll = (
-        streaming.finalize_kll_tier(spark, str(tmp_path / "kll_partials"))
+        kll_quantile_rollup(spark.read.parquet(str(tmp_path / "kll_partials")), to="day")
         .toPandas().set_index("bucket_ts").sort_index()
     )
     agg = (
